@@ -1,9 +1,8 @@
 """The flagship extraction pipeline, end to end:
 
     read pages table → assign split buckets → resume-filter vs checkpoint
-    manifest → salt + repartition (skew control) → Arrow-vectorized
-    extraction (mapInPandas) → write partitioned output → lineage counters
-    → mark splits complete.
+    manifest → Arrow-vectorized extraction (mapInPandas) → write
+    partitioned output → lineage counters → mark splits complete.
 
 This is the Spark restatement of the reference's sequential per-book loop
 (/root/reference/src/ingest.py:283-296) — the loop becomes per-partition
@@ -12,14 +11,17 @@ from-scratch extractors (extract/); the nodes.json sink becomes a
 partitioned, resumable table write.
 
 Scale design (north_rule):
-- parallelism: explicit repartition to ``n_tasks`` on a salted key, sized so
-  a task holds ~target_partition_mb of payload at the configured scale;
-- skew: the repartition key is ``xxhash64(url)`` — uniform regardless of the
-  zipf host distribution; for host-colocated variants use
-  ``salted_host_key`` which splits hot hosts across S buckets
+- one kernel: ``_extract_batches`` is the only per-doc loop and
+  ``extract_splits`` its only call site — batch, resumable and streaming
+  paths all go through it, so every path emits the same bytes;
+- parallelism: zero-shuffle by default — task granularity comes from the
+  input splits; ``n_tasks`` forces a repartition whose only key is
+  ``xxhash64(url)``, uniform regardless of the zipf host distribution;
+- skew: host-colocated consumers use ``auto_salted_host_key`` /
+  ``salted_host_key``, which split hot hosts across S buckets
   (``concat(host, pmod(xxhash64(url), S))``); AQE skew-join stays on;
-- the heavy stage is mapInPandas: no shuffle after the repartition until the
-  (tiny, pre-aggregated) lineage shuffle.
+- the heavy stage is mapInPandas: no shuffle after it until the (tiny,
+  pre-aggregated) lineage shuffle.
 """
 
 from __future__ import annotations
@@ -87,107 +89,6 @@ def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
         yield pd.DataFrame(out)
 
 
-SLIM_SCHEMA = (
-    "url string, parser string, chunk_count int, n_bytes_in bigint, "
-    "error string, split_id int, fp string"
-)
-
-
-def _extract_batches_slim(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-    """Benchmark/fingerprint variant: same extraction, but the canonical
-    bytes are hashed (md5) worker-side and only slim columns cross the
-    Arrow channel — separates extraction throughput from result-transfer
-    volume in scaling measurements."""
-    import hashlib
-
-    import pandas as pd
-
-    for b in batches:
-        out: list[dict] = []
-        for url, payload, split_id in zip(b["url"], b["html"], b["split_id"]):
-            row: dict = {
-                "url": url,
-                "parser": None,
-                "chunk_count": None,
-                "n_bytes_in": len(payload) if payload is not None else 0,
-                "error": None,
-                "split_id": int(split_id),
-                "fp": None,
-            }
-            try:
-                payload = bytes(payload) if payload is not None else b""
-                rec = extract_document(url, payload)
-                canon = encode_doc(rec["url"], rec["text"], rec["spans"], rec["meta"])
-                row.update(
-                    parser=rec["meta"]["parser"],
-                    chunk_count=rec["meta"]["chunk_count"],
-                    fp=hashlib.md5(canon.encode("utf-8")).hexdigest(),
-                )
-            except Exception as e:
-                row["error"] = f"{type(e).__name__}: {e}"[:500]
-            out.append(row)
-        yield pd.DataFrame(out)
-
-
-def extract_pages_slim(pages: DataFrame, n_splits: int = 64) -> DataFrame:
-    """Zero-shuffle slim extraction (url + md5-of-canonical only)."""
-    df = ckpt.with_split_id(pages, n_splits)
-    return df.mapInPandas(_extract_batches_slim, schema=SLIM_SCHEMA)
-
-
-def _extract_batches_arrow(batches):  # Iterator[pa.RecordBatch]
-    """mapInArrow twin of the slim extractor: RecordBatch in, RecordBatch
-    out — skips the pandas layer entirely (lowest-overhead Python channel;
-    same per-doc logic, verified byte-identical in tests)."""
-    import hashlib
-
-    import pyarrow as pa
-
-    for b in batches:
-        urls = b.column("url").to_pylist()
-        payloads = b.column("html").to_pylist()
-        splits = b.column("split_id").to_pylist()
-        cols: dict[str, list] = {
-            "url": [], "parser": [], "chunk_count": [], "n_bytes_in": [],
-            "error": [], "split_id": [], "fp": [],
-        }
-        for url, payload, split_id in zip(urls, payloads, splits):
-            parser = chunk_count = fp = error = None
-            try:
-                payload = bytes(payload) if payload is not None else b""
-                rec = extract_document(url, payload)
-                canon = encode_doc(rec["url"], rec["text"], rec["spans"], rec["meta"])
-                parser = rec["meta"]["parser"]
-                chunk_count = rec["meta"]["chunk_count"]
-                fp = hashlib.md5(canon.encode("utf-8")).hexdigest()
-            except Exception as e:
-                error = f"{type(e).__name__}: {e}"[:500]
-            cols["url"].append(url)
-            cols["parser"].append(parser)
-            cols["chunk_count"].append(chunk_count)
-            cols["n_bytes_in"].append(len(payload) if payload is not None else 0)
-            cols["error"].append(error)
-            cols["split_id"].append(int(split_id))
-            cols["fp"].append(fp)
-        yield pa.RecordBatch.from_pydict(
-            cols,
-            schema=pa.schema(
-                [
-                    ("url", pa.string()), ("parser", pa.string()),
-                    ("chunk_count", pa.int32()), ("n_bytes_in", pa.int64()),
-                    ("error", pa.string()), ("split_id", pa.int32()),
-                    ("fp", pa.string()),
-                ]
-            ),
-        )
-
-
-def extract_pages_arrow(pages: DataFrame, n_splits: int = 64) -> DataFrame:
-    """mapInArrow variant of the slim extractor."""
-    df = ckpt.with_split_id(pages, n_splits)
-    return df.mapInArrow(_extract_batches_arrow, schema=SLIM_SCHEMA)
-
-
 def salted_host_key(url_col: str = "url", salt_buckets: int = 16):
     """Host-colocated partition key with hot-host splitting:
     concat(host, pmod(xxhash64(url), S)). Salts EVERY host — co-location
@@ -223,17 +124,22 @@ def auto_salted_host_key(
         ]
     finally:
         counts.unpersist()
-    salted = F.concat_ws(
-        "#", host, F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_buckets))
-    )
+    salted = salted_host_key(url_col, salt_buckets)
     return F.when(host.isin(hot), salted).otherwise(host) if hot else host
 
 
+def extract_splits(df: DataFrame, n_tasks: int | None = None) -> DataFrame:
+    """The one extraction call site: a frame that already carries
+    ``split_id`` → extracted rows (EXTRACTED_SCHEMA). With ``n_tasks`` the
+    rows are first repartitioned on ``xxhash64(url)``; otherwise the plan is
+    shuffle-free and task granularity comes from the input splits."""
+    if n_tasks is not None:
+        df = df.repartition(n_tasks, F.xxhash64("url"))
+    return df.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
+
+
 def extract_pages(
-    pages: DataFrame,
-    n_splits: int = 64,
-    n_tasks: int | None = None,
-    partition_by_host: bool = False,
+    pages: DataFrame, n_splits: int = 64, n_tasks: int | None = None
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extracted DF (no I/O).
 
@@ -241,17 +147,11 @@ def extract_pages(
     zero-shuffle: task granularity comes from input splits
     (`spark.sql.files.maxPartitionBytes` — size it so a task holds a few MB
     of payload; small splits double as skew insurance since per-doc cost
-    varies ~12× between HTML and PDF). Pass n_tasks to force a repartition
-    — needed when the source is a few huge unsplittable files or when
-    host-colocation with hot-host salting (`partition_by_host`) is wanted.
+    varies ~12× between HTML and PDF). Pass n_tasks to repartition on
+    ``xxhash64(url)`` first — needed when the source is a few huge
+    unsplittable files.
     """
-    df = ckpt.with_split_id(pages, n_splits)
-    if n_tasks is not None or partition_by_host:
-        spark = pages.sparkSession
-        n_tasks = n_tasks or spark.sparkContext.defaultParallelism
-        key = salted_host_key() if partition_by_host else F.xxhash64("url")
-        df = df.repartition(n_tasks, key)
-    return df.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
+    return extract_splits(ckpt.with_split_id(pages, n_splits), n_tasks)
 
 
 def run_pipeline(
@@ -272,6 +172,8 @@ def run_pipeline(
     manifest and redoes only unmarked splits. ``fail_after_batches`` is a
     test hook that simulates a mid-job crash between commits.
     """
+    if commit_batches < 1:
+        raise ValueError(f"commit_batches must be >= 1, got {commit_batches}")
     run_id = uuid.uuid4().hex[:12]
     df = ckpt.with_split_id(pages, n_splits)
     if resume:
@@ -293,9 +195,7 @@ def run_pipeline(
         if fail_after_batches is not None and bi >= fail_after_batches:
             break  # simulated crash: manifest only covers committed batches
         part = df.filter(F.col("split_id").isin(split_batch))
-        if n_tasks is not None:  # else zero-shuffle: input-split granularity
-            part = part.repartition(n_tasks, F.xxhash64("url"))
-        extracted = part.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
+        extracted = extract_splits(part, n_tasks)
         # persist so the write and the manifest aggregates share ONE
         # extraction pass — re-reading the output directory per batch costs
         # a driver-side file listing that grows with files-per-batch (real

@@ -40,6 +40,8 @@ MANIFEST_SCHEMA = (
 
 
 def with_split_id(df: DataFrame, n_splits: int, url_col: str = "url") -> DataFrame:
+    if n_splits < 1:
+        raise ValueError(f"n_splits must be >= 1, got {n_splits}")
     return df.withColumn(
         "split_id", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_splits)).cast("int")
     )

@@ -1,10 +1,11 @@
 """Streaming twins of the batch pipeline stages.
 
 - stream_extract: continuous ingestion — readStream over the input-table
-  directory → the SAME mapInPandas extraction used by plans/pipeline.py →
-  parquet sink with checkpointing. Stateless, so exactly-once comes from
-  the sink+checkpoint contract; resume is Spark's own offset log (the batch
-  path's split-manifest is the backfill analog).
+  directory → plans.pipeline.extract_splits, the one extraction call site
+  the batch job also uses → parquet sink with checkpointing. Stateless,
+  so exactly-once comes from the sink+checkpoint contract; resume is
+  Spark's own offset log (the batch path's split-manifest is the backfill
+  analog). stream_ingest_with_manifest goes through extract_splits too.
 - windowed_counts: tumbling-window counters with a watermark for late data
   (the streaming twin of queries.windowed_event_counts).
 - sessionize_stateful: applyInPandasWithState custom stateful operator —
@@ -21,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-from ..plans.pipeline import EXTRACTED_SCHEMA, _extract_batches
+from ..plans.pipeline import extract_splits
 from ..sources.checkpoint import with_split_id
 from ..synth.pages import PAGES_SCHEMA
 
@@ -45,9 +46,7 @@ def stream_extract(
 ):
     """Start (availableNow) the streaming extraction; returns the query."""
     pages = read_pages_stream(spark, input_dir)
-    extracted = with_split_id(pages, n_splits).mapInPandas(
-        _extract_batches, schema=EXTRACTED_SCHEMA
-    )
+    extracted = extract_splits(with_split_id(pages, n_splits))
     return (
         extracted.writeStream.trigger(availableNow=True)
         .option("checkpointLocation", checkpoint_dir)
@@ -103,8 +102,7 @@ def stream_ingest_with_manifest(
             (F.lit(int(batch_id)).cast("long") * n_splits
              + F.col("split_id")).cast("int"),
         )
-        extracted = df.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
-        extracted = extracted.persist()
+        extracted = extract_splits(df).persist()
         try:
             if extracted.isEmpty():
                 return

@@ -197,10 +197,7 @@ def test_password_protected_lands_in_error_column(spark):
     error row, never a task failure."""
     import pandas as pd
 
-    from pdf_parser_benchmark_spark.plans.pipeline import (
-        EXTRACTED_SCHEMA,
-        extract_pages,
-    )
+    from pdf_parser_benchmark_spark.plans.pipeline import extract_pages
 
     data = build_pdf(SPECS, encrypt="aes")
     m = re.search(rb"/U <([0-9a-f]+)>", data)

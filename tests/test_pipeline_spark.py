@@ -74,6 +74,27 @@ def test_crash_resume_byte_identity(spark, pages, tmp_path):
     assert r3["splits_done"] == 0  # idempotent noop
 
 
+@pytest.mark.parametrize(
+    "bad", [{"commit_batches": 0}, {"n_splits": 0}, {"n_splits": -8}],
+    ids=["commit_batches=0", "n_splits=0", "n_splits=-8"],
+)
+def test_bad_job_arguments_rejected_before_any_spark_job(spark, pages, tmp_path, bad):
+    """commit_batches and n_splits arrive from the job's command line: a
+    value below 1 raises ValueError before the split-listing job runs."""
+    ((name, value),) = bad.items()
+    group = f"bad-{name}-{value}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=name):
+            run_pipeline(spark, pages, str(tmp_path / "out"),
+                         str(tmp_path / "mani"), **{"n_splits": 8, **bad})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_lineage_counters(spark, pages):
     out = extract_pages(pages, n_splits=8)
     lin = lineage_counters(out).collect()
@@ -158,19 +179,6 @@ def test_output_compaction(spark, pages, tmp_path):
              for r in output_file_stats(spark, out).collect()}
     assert all(n == 1 for n in after.values())
     assert _canon_map(spark.read.parquet(out)) == content_before
-
-
-def test_map_in_arrow_matches_pandas_path(spark, pages):
-    from pdf_parser_benchmark_spark.plans.pipeline import (
-        extract_pages_arrow,
-        extract_pages_slim,
-    )
-
-    a = {r["url"]: r["fp"]
-         for r in extract_pages_slim(pages, n_splits=8).collect()}
-    b = {r["url"]: r["fp"]
-         for r in extract_pages_arrow(pages, n_splits=8).collect()}
-    assert a == b and len(a) == N_ROWS
 
 
 def test_iceberg_sink_per_partition_replace_contract(spark, monkeypatch):

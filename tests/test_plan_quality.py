@@ -45,8 +45,13 @@ def test_extraction_plan_is_shuffle_free(spark):
 
     pages = generate_pages_df(spark, 10, partitions=2)
     # generator source (Range → mapInPandas) — no Exchange anywhere
-    plan = _plan(extract_pages(pages, n_splits=8))
-    assert "Exchange" not in plan
+    df = extract_pages(pages, n_splits=8)
+    assert "Exchange" not in _plan(df)
+    # exactly one extractor node, a MapInPandas running _extract_batches:
+    # the benchmark tracer finds the extract stage by this node name
+    simple = _plan(df, "simple")
+    assert simple.count("MapInPandas _extract_batches(") == 1
+    assert simple.count("_extract_batches") == 1
 
 
 def test_tpch_q1_partial_aggregation(spark, sf_dir):

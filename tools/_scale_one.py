@@ -23,7 +23,7 @@ def main() -> None:
     shuffle = len(sys.argv) > 4 and sys.argv[4] == "shuffle"
 
     from pdf_parser_benchmark_spark.session import get_spark
-    from pdf_parser_benchmark_spark.plans.pipeline import extract_pages_slim
+    from pdf_parser_benchmark_spark.plans.pipeline import extract_pages
 
     spark = get_spark(
         app_name=f"scale{cpus}",
@@ -40,10 +40,11 @@ def main() -> None:
     bytes_in = pages.agg(F.sum(F.length("html"))).collect()[0][0]
 
     def job():
-        out = extract_pages_slim(pages, n_splits=64)
+        out = extract_pages(pages, n_splits=64)
+        # order-free fold of the per-doc md5 of the canonical JSON
         row = out.agg(
             F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("fp")).alias("fp"),
+            F.bit_xor(F.xxhash64(F.md5("canonical"))).alias("fp"),
             F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("err"),
         ).collect()[0]
         return row["n"], row["fp"], row["err"]
