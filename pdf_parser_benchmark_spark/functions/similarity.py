@@ -49,7 +49,10 @@ def cosine_rounded_prenormed(
 
     Bit-identical to cosine_rounded by construction: norm() on the same
     array yields the same double wherever it is evaluated, the denominator
-    is the same product, the dot fold and the rounding are unchanged."""
+    is the same product, the dot fold and the rounding are unchanged.
+
+    Only the embedding-cosine dedup scorers (`operators/dedup.py`) use it;
+    the kNN searches score through the numpy `knn._cosine_topk`."""
     denom = norm_a * norm_b
     return F.round(
         F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0)), digits

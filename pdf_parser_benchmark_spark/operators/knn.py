@@ -1,15 +1,16 @@
 """J4/W2 — k-NN retrieval over an embedding column, plus the scale path.
 
-- brute-force: queries ⋈ corpus crossJoin (queries broadcast — the small
-  side by construction) + JVM-side cosine + window top-k. Exact; right
-  answer at any scale where |queries|×|corpus| tasks fit — the reference's
-  own ANN config falls back to full scan below 10k vectors
-  (/root/reference/docs/INFRASTRUCTURE.md:227-244).
+- brute-force: the query side (bounded, collected to the driver) ships in
+  the task closure and one numpy pass over the corpus scores every
+  (query, vector) pair (`_cosine_topk`), then a window keeps the top k.
+  Exact; right answer at any scale where |queries|×|corpus| narrow scored
+  rows fit — the reference's own ANN config falls back to full scan below
+  10k vectors (reference docs/INFRASTRUCTURE.md:227-244).
 - IVF: coarse quantizer = centroid per partition key (here: per `label`,
-  the testdata's natural cluster id; in production k-means iterations of
-  the same groupBy-average shape). Probe = nearest `nprobe` centroids, then
-  exact search within the probed inverted lists only — turns the crossJoin
-  into a pruned join on list id.
+  the testdata's natural cluster id; or k-means lists). Probe = nearest
+  `nprobe` centroids per query; the |Q|·nprobe probe rows are collected
+  and the same numpy pass scores each query against the rows of its
+  probed lists only — no pair join, the corpus is never shuffled.
 
 Top-k ties break on vec_id ascending for determinism.
 """
@@ -18,11 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..functions.similarity import (
-    cosine_rounded,
-    cosine_rounded_prenormed,
-    norm,
-)
+from ..functions.similarity import cosine_rounded
 
 
 def _scored_topk(
@@ -42,104 +39,85 @@ def _scored_topk(
     )
 
 
-def brute_force_topk(
-    queries: DataFrame,
+def _np_fold(A, B):
+    """Per row, Σ_i A[:, i]·B[:, i] the way Spark's `aggregate` folds a
+    `zip_with` product: each product in the operands' dtype (float32 ×
+    float32 stays float32), widened to double, summed from 0.0 in element
+    order. B may be a single (1, L) row broadcast against A."""
+    import numpy as np
+
+    acc = np.zeros(len(A))
+    for i in range(A.shape[1]):
+        acc += (A[:, i] * B[:, i]).astype(np.float64)
+    return acc
+
+
+def _is_f32(df: DataFrame, vec_col: str) -> bool:
+    return df.schema[vec_col].dataType.elementType.simpleString() == "float"
+
+
+def _cosine_topk(
     corpus: DataFrame,
-    k: int = 5,
-    query_id: str = "qid",
-    query_vec: str = "qvec",
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    max_queries: int = 4096,
+    Q: list,
+    k: int,
+    queries: DataFrame,
+    query_id: str,
+    query_vec: str,
+    corpus_id: str,
+    corpus_vec: str,
+    list_of=None,
 ) -> DataFrame:
-    """Exact k-NN: numpy-scored corpus pass (r7) + exact top-k window.
+    """The one cosine scorer behind brute_force_topk, ivf_topk and
+    ivf_topk_kmeans. `Q` is a driver-side list of (qid, qvec, list id); an
+    entry scores against every corpus row when its list id is None, else
+    only against the rows `list_of(batch)` puts in that list (the pairs a
+    probe ⋈ corpus join on the list id would make). `queries` supplies the
+    qid and vector types. ONE mapInPandas pass over the caller's corpus
+    projection emits narrow (qid, id, raw score) rows; the JVM rounds
+    (`F.round`) and `_scored_topk` keeps the top k.
 
-    The former shape materialized |Q|·|corpus| joined pair rows (two full
-    vectors each) through a broadcast nested-loop join only to fold a dot
-    product per pair — ~1 GB of array copying for 20×100k pairs. Now the
-    query vectors (a bounded driver collect, `max_queries`-guarded like
-    ivfpq's query side) ship in the task closure and ONE mapInPandas pass
-    over the corpus emits narrow (qid, id, raw_score) rows; the rounding
-    stays in the JVM (`F.round`) and the top-k window is unchanged.
-
-    Value-exactness vs the expression path is by operation-for-operation
-    replication, not approximation (`_np_cosine_raw`): float32 products
-    widened to float64 and accumulated in element order (= the
-    `aggregate(zip_with(...))` fold), IEEE sqrt/divide, Spark's
-    NaN-comparison and null/length-mismatch semantics in the scalar
-    fallback — pinned by tests/test_operators_spark.py::
-    test_brute_force_numpy_matches_expression_path over nulls, NaN, zero,
-    mismatched-dim and empty vectors, and by the unchanged pinned
-    oracles/parity gate."""
-    qrows = queries.select(query_id, query_vec).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"brute_force_topk: {len(qrows)} query rows exceed "
-            f"max_queries={max_queries}; raise the limit explicitly for "
-            "bigger batches (the query side is collected to the driver)"
-        )
-    elem = corpus.schema[corpus_vec].dataType.elementType.simpleString()
-    is_f32 = elem == "float"
+    Value-exact vs `cosine_rounded` by operation-for-operation replication:
+    each side's norm squares in its own element type (`_np_fold` =
+    `norm()`); the dot multiplies in float32 only when both sides are
+    float32 (Spark widens float×double); IEEE sqrt/divide; NaN > 0 is
+    true. A null vector scores 0.0; a length mismatch scores NULL when the
+    denominator is live (`zip_with` pads with nulls). Each Arrow batch is
+    grouped by vector length, so a ragged row stays vectorized — pinned by
+    test_brute_force_numpy_matches_expression_path."""
+    q_f32, c_f32 = _is_f32(queries, query_vec), _is_f32(corpus, corpus_vec)
     qid_t = queries.schema[query_id].dataType.simpleString()
     cid_t = corpus.schema[corpus_id].dataType.simpleString()
-    Q = [
-        (r[0], None if r[1] is None else list(r[1]))
-        for r in qrows
-    ]
+    Q = [tuple(e) for e in Q]  # Rows pickle as plain tuples
 
     def gen(batches):
         import numpy as _np
         import pandas as _pd
 
-        f32 = _np.float32
-        qprep = []  # (qid, qlist, qarr, qnorm)
-        for q_id, q in Q:
-            if q is None:
-                qprep.append((q_id, None, None, None))
-                continue
-            acc = 0.0
-            if is_f32:
-                qa = _np.asarray(q, dtype=_np.float32)
-                for x in qa:
-                    acc += float(x * x)
-            else:
-                qa = _np.asarray(q, dtype=_np.float64)
-                for x in q:
-                    acc += x * x
-            qprep.append((q_id, q, qa, float(_np.sqrt(acc))))
+        f32, f64 = _np.float32, _np.float64
+        both_f32 = q_f32 and c_f32
+        qids = _pd.Series([e[0] for e in Q])
+        qprep = []  # (qvec in the dot dtype, qnorm, list id)
+        for _, q, lst in Q:
+            qa = qn = None
+            if q is not None:
+                qa = _np.asarray(q, dtype=f32 if q_f32 else f64)[None, :]
+                qn = float(_np.sqrt(_np_fold(qa, qa)[0]))
+                qa = qa if both_f32 else qa.astype(f64)
+            qprep.append((qa, qn, lst))
 
-        def cn_of(v):
-            # norm fold: acc(double) + v*v (element dtype), element order
-            acc = 0.0
-            if is_f32:
-                for x in _np.asarray(v, dtype=_np.float32):
-                    acc += float(x * x)
-            else:
-                for x in v:
-                    acc += x * x
-            return float(_np.sqrt(acc))
-
-        def scalar_score(qlist, qa, qn, v):
-            # replicates round-input of: when(norm(a)*norm(b)>0, dot/denom)
-            # .otherwise(0.0) with zip_with null extension and Spark's
-            # NaN>0 == true comparison semantics
-            if qlist is None or v is None:
-                return 0.0  # null norm → null denom → otherwise
-            cn = cn_of(v)
-            denom = qn * cn
-            if not (denom > 0) and not _np.isnan(denom):
-                return 0.0
-            if len(v) != len(qlist):
-                return None  # null dot through a taken when-branch
-            acc = 0.0
-            if is_f32:
-                va = _np.asarray(v, dtype=_np.float32)
-                for x, y in zip(qa, va):
-                    acc += float(x * y)
-            else:
-                for x, y in zip(qlist, v):
-                    acc += x * y
-            return acc / denom
+        def score(V, CN, qa, qn):
+            m = len(CN)
+            if qa is None or V is None:  # null query or null corpus vectors
+                return _np.zeros(m), _np.zeros(m, dtype=_np.int8)
+            denom = qn * CN
+            live = (denom > 0) | _np.isnan(denom)
+            if V.shape[1] != qa.shape[1]:
+                # null dot through a taken when-branch → NULL score
+                return _np.zeros(m), _np.where(live, 1, 0).astype(_np.int8)
+            with _np.errstate(divide="ignore", invalid="ignore"):
+                sc = _np.where(live, _np_fold(V, qa) / denom, 0.0)
+            isn = _np.isnan(sc)
+            return _np.where(isn, 0.0, sc), _np.where(isn, 2, 0).astype(_np.int8)
 
         # Arrow's pandas conversion folds NaN into null, so nullness and
         # NaN-ness travel in an explicit `kind` column (0 = use score,
@@ -147,77 +125,43 @@ def brute_force_topk(
         for b in batches:
             if not len(b):
                 continue
-            ids = b[corpus_id]
             vs = b[corpus_vec].to_numpy()
-            n = len(b)
-            lens = [(-1 if v is None else len(v)) for v in vs]
-            L = lens[0]
-            uniform = L >= 0 and all(x == L for x in lens)
-            frames = []
-            if uniform:
-                work = _np.float32 if is_f32 else _np.float64
-                V = (
-                    _np.stack(vs).astype(work)
-                    if L
-                    else _np.zeros((n, 0), dtype=work)
-                )
-                cn_acc = _np.zeros(n, dtype=_np.float64)
-                for i in range(L):
-                    cn_acc += (V[:, i] * V[:, i]).astype(_np.float64)
-                CN = _np.sqrt(cn_acc)
-                for q_id, qlist, qa, qn in qprep:
-                    if qlist is None:
-                        sc = _np.zeros(n, dtype=_np.float64)
-                        kind = _np.zeros(n, dtype=_np.int8)
-                    elif len(qlist) != L:
-                        # null dot through a taken when-branch → NULL score
-                        denom = qn * CN
-                        live = (denom > 0) | _np.isnan(denom)
-                        sc = _np.zeros(n, dtype=_np.float64)
-                        kind = _np.where(live, 1, 0).astype(_np.int8)
-                    else:
-                        dot = _np.zeros(n, dtype=_np.float64)
-                        for i in range(L):
-                            dot += (V[:, i] * qa[i]).astype(_np.float64)
-                        denom = qn * CN
-                        with _np.errstate(divide="ignore", invalid="ignore"):
-                            sc = _np.where(
-                                (denom > 0) | _np.isnan(denom),
-                                dot / denom,
-                                0.0,
-                            )
-                        isn = _np.isnan(sc)
-                        kind = _np.where(isn, 2, 0).astype(_np.int8)
-                        sc = _np.where(isn, 0.0, sc)
-                    frames.append(_pd.DataFrame({
-                        "__qid": _pd.Series([q_id] * n),
-                        "__cid": ids.reset_index(drop=True),
-                        "score": sc,
-                        "kind": kind,
-                    }))
+            lens = _np.array([-1 if v is None else len(v) for v in vs])
+            # blocks[list id] = [(rows, V in the dot dtype, norms)], one
+            # entry per vector length (-1 = null vectors, V=None)
+            if list_of is None:
+                by_len = _pd.Series(lens).groupby(lens).indices
+                keyed = ((None, L, rows) for L, rows in by_len.items())
             else:
-                for q_id, qlist, qa, qn in qprep:
-                    raw = [scalar_score(qlist, qa, qn, v) for v in vs]
-                    sc = _np.array(
-                        [0.0 if (x is None or _np.isnan(x)) else x for x in raw],
-                        dtype=_np.float64,
-                    )
-                    kind = _np.array(
-                        [1 if x is None else (2 if _np.isnan(x) else 0)
-                         for x in raw],
-                        dtype=_np.int8,
-                    )
-                    frames.append(_pd.DataFrame({
-                        "__qid": _pd.Series([q_id] * n),
-                        "__cid": ids.reset_index(drop=True),
-                        "score": sc,
-                        "kind": kind,
-                    }))
-            yield _pd.concat(frames, ignore_index=True)
+                by_list = _pd.DataFrame(
+                    {"l": list_of(b), "n": lens}
+                ).groupby(["l", "n"]).indices
+                keyed = ((lst, L, rows) for (lst, L), rows in by_list.items())
+            blocks: dict = {}
+            for lst, L, rows in keyed:
+                V, CN = None, _np.zeros(len(rows))
+                if L >= 0:
+                    V = _np.stack(list(vs[rows])).astype(f32 if c_f32 else f64)
+                    CN = _np.sqrt(_np_fold(V, V))
+                    V = V if both_f32 else V.astype(f64)
+                blocks.setdefault(lst, []).append((rows, V, CN))
+            out = [
+                (_np.full(len(rows), e), rows, *score(V, CN, qa, qn))
+                for e, (qa, qn, lst) in enumerate(qprep)
+                for rows, V, CN in blocks.get(lst, ())
+            ]
+            if not out:
+                continue
+            pick, rows, sc, kind = (_np.concatenate(c) for c in zip(*out))
+            yield _pd.DataFrame({
+                "__qid": qids.take(pick).reset_index(drop=True),
+                "__cid": b[corpus_id].take(rows).reset_index(drop=True),
+                "score": sc,
+                "kind": kind,
+            })
 
     scored = (
-        corpus.select(corpus_id, corpus_vec)
-        .mapInPandas(
+        corpus.mapInPandas(
             gen, f"__qid {qid_t}, __cid {cid_t}, score double, kind tinyint"
         )
         .select(
@@ -232,6 +176,34 @@ def brute_force_topk(
         )
     )
     return _scored_topk(scored, k, query_id, corpus_id)
+
+
+def brute_force_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int = 5,
+    query_id: str = "qid",
+    query_vec: str = "qvec",
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+    max_queries: int = 4096,
+) -> DataFrame:
+    """Exact k-NN: the query vectors (a bounded driver collect that stops
+    at `max_queries` + 1 rows, like ivfpq's query side) ship in the task
+    closure and `_cosine_topk` scores every (query, corpus row) pair in
+    one numpy pass, then keeps the exact top k. No pair join: the former
+    broadcast nested-loop join copied two full vectors per pair only to
+    fold a dot product — ~1 GB of array copying for 20×100k pairs."""
+    qrows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
+    if len(qrows) > max_queries:
+        raise ValueError(
+            f"brute_force_topk: more than max_queries={max_queries} query "
+            "rows; raise the limit explicitly for bigger batches (the query "
+            "side is collected to the driver)"
+        )
+    Q = [(q_id, q, None) for q_id, q in qrows]
+    return _cosine_topk(corpus.select(corpus_id, corpus_vec), Q, k, queries,
+                        query_id, query_vec, corpus_id, corpus_vec)
 
 
 def centroids_by(
@@ -286,12 +258,7 @@ def _exact_rerank(
     exact = pool.withColumn(
         "score", cosine_rounded(F.col(query_vec), F.col(corpus_vec))
     )
-    w2 = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
-    return (
-        exact.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select(query_id, corpus_id, "score", F.col("rn").alias("rank"))
-    )
+    return _scored_topk(exact, k, query_id, corpus_id)
 
 
 def _np_nearest(vecs32, cents32):
@@ -336,7 +303,6 @@ def kmeans_fit(
     vec_col: str = "embedding",
     k: int = 4,
     iterations: int = 4,
-    keep_vec: bool = False,
 ) -> DataFrame:
     """Deterministic Lloyd's k-means, fully vectorized (r5): each iteration
     is ONE numpy mapInPandas pass over the corpus — per Arrow batch the
@@ -356,10 +322,6 @@ def kmeans_fit(
 
     Returns the assignment DataFrame (id, cid) — centroids are in
     `kmeans_fit.last_centroids` after the call (list of (cid, [floats])).
-    keep_vec=True returns (id, cid, vec) instead — the vector column rides
-    the assignment pass as an untouched Arrow passthrough, so callers that
-    need (vector, list id) pairs (IVF search, residual encoding) skip a
-    full corpus⋈assignment shuffle join (r7).
     """
     import numpy as np
 
@@ -425,21 +387,11 @@ def kmeans_fit(
             if not len(b):
                 continue
             vecs = _np.stack(b["__v"].to_numpy()).astype(_np.float32)
-            out = {
+            yield _pd.DataFrame({
                 "__id": b["__id"],
                 "cid": _np_nearest(vecs, Cfinal).astype(_np.int32),
-            }
-            if keep_vec:
-                # passthrough of the ORIGINAL arrays (no computation) —
-                # Arrow round-trips the float32 values bit-identically
-                out["__v"] = b["__v"]
-            yield _pd.DataFrame(out)
+            })
 
-    if keep_vec:
-        vec_type = corpus.schema[vec_col].dataType.simpleString()
-        return vecs_df.mapInPandas(
-            assign_gen, f"__id {id_type}, cid int, __v {vec_type}"
-        ).select(F.col("__id").alias(id_col), "cid", F.col("__v").alias(vec_col))
     return vecs_df.mapInPandas(assign_gen, f"__id {id_type}, cid int").select(
         F.col("__id").alias(id_col), "cid"
     )
@@ -458,12 +410,14 @@ def ivf_topk_kmeans(
     corpus_vec: str = "embedding",
 ) -> DataFrame:
     """IVF with a k-means coarse quantizer: fit lists, probe the nprobe
-    nearest centroids per query, exact-search only the probed lists."""
+    nearest centroids per query, exact-search only the probed lists. The
+    scoring pass assigns each vector its list itself (`_np_nearest`
+    against the final centroids, as kmeans_fit's assignment does)."""
+    import numpy as np
+
     spark = corpus.sparkSession
-    # keep_vec: the vectors ride the assignment pass, replacing the former
-    # corpus⋈assignment shuffle join (identical values — Arrow passthrough)
-    listed = kmeans_fit(corpus, corpus_id, corpus_vec, k=n_lists,
-                        iterations=iterations, keep_vec=True)
+    kmeans_fit(corpus, corpus_id, corpus_vec, k=n_lists, iterations=iterations)
+    C = np.asarray([v for _, v in kmeans_fit.last_centroids], dtype=np.float32)
     cents = spark.createDataFrame(
         kmeans_fit.last_centroids, "cid int, centroid array<float>"
     )
@@ -476,16 +430,14 @@ def ivf_topk_kmeans(
         .filter(F.col("rn") <= nprobe)
         .select(query_id, query_vec, "cid")
     )
-    pairs = listed.withColumn("__cn", norm(F.col(corpus_vec))).join(
-        F.broadcast(probed.withColumn("__qn", norm(F.col(query_vec)))), "cid"
-    )
-    scored = pairs.withColumn(
-        "score",
-        cosine_rounded_prenormed(
-            F.col(query_vec), F.col(corpus_vec), F.col("__qn"), F.col("__cn")
-        ),
-    )
-    return _scored_topk(scored, k, query_id, corpus_id)
+
+    def list_of(b):
+        vecs = np.stack(b[corpus_vec].to_numpy()).astype(np.float32)
+        return _np_nearest(vecs, C)
+
+    return _cosine_topk(corpus.select(corpus_id, corpus_vec), probed.collect(),
+                        k, queries, query_id, query_vec, corpus_id,
+                        corpus_vec, list_of)
 
 
 def pq_fit(
@@ -1349,14 +1301,10 @@ def ivf_topk(
         .filter(F.col("rn") <= nprobe)
         .select(query_id, query_vec, list_col)
     )
-    # pruned equi-join on list id replaces the full crossJoin
-    pairs = corpus.withColumn("__cn", norm(F.col(corpus_vec))).join(
-        F.broadcast(probed.withColumn("__qn", norm(F.col(query_vec)))), list_col
+    Q = probed.collect()
+    # the probed-lists filter is a pushable predicate on the corpus scan
+    listed = corpus.select(corpus_id, corpus_vec, list_col).filter(
+        F.col(list_col).isin(list(dict.fromkeys(r[2] for r in Q)))
     )
-    scored = pairs.withColumn(
-        "score",
-        cosine_rounded_prenormed(
-            F.col(query_vec), F.col(corpus_vec), F.col("__qn"), F.col("__cn")
-        ),
-    )
-    return _scored_topk(scored, k, query_id, corpus_id)
+    return _cosine_topk(listed, Q, k, queries, query_id, query_vec, corpus_id,
+                        corpus_vec, lambda b: b[list_col].to_numpy())

@@ -5,7 +5,11 @@ per-iteration rounding)."""
 import numpy as np
 import pytest
 
-from pdf_parser_benchmark_spark.operators.knn import ivf_topk_kmeans, kmeans_fit
+from pdf_parser_benchmark_spark.operators.knn import (
+    brute_force_topk,
+    ivf_topk_kmeans,
+    kmeans_fit,
+)
 
 
 @pytest.fixture(scope="module")
@@ -73,6 +77,10 @@ def test_ivf_kmeans_topk_subset_of_bruteforce_corpus(spark, emb):
     assert len(out) == 6  # 2 queries × top-3
     for r in out:
         assert r["vec_id"] >= 2 and 1 <= r["rank"] <= 3
+    # probing all n_lists lists scores exactly the brute-force pairs:
+    # identical rows, scores and ranks included
+    full = ivf_topk_kmeans(queries, corpus, k=5, nprobe=4, n_lists=4).collect()
+    assert sorted(full) == sorted(brute_force_topk(queries, corpus, k=5).collect())
 
 
 def test_pq_pretrained_index_matches_inline_fit(spark):

@@ -206,6 +206,11 @@ def test_ivf_recall_tradeoff(spark, sf_dir):
     r2, r4, r10 = recall(2), recall(4), recall(10)
     assert r10 == 1.0, f"nprobe=all-lists must equal exact search, got {r10}"
     assert r2 <= r4 <= r10, (r2, r4, r10)
+    # probing every list scores exactly the brute-force pairs: identical
+    # rows, scores and ranks included
+    assert sorted(ivf_topk(queries, corpus, k=3, nprobe=10).collect()) == sorted(
+        brute_force_topk(queries, corpus, k=3).collect()
+    )
 
 
 def test_approx_distinct_within_tolerance(spark, sf_dir):
@@ -813,25 +818,28 @@ def test_brute_force_numpy_matches_expression_path(spark):
         ],
         "qid long, qvec array<float>",
     )
-    got = brute_force_topk(queries, corpus, k=len(corpus_rows)).select(
-        "qid", "vec_id", "score"
-    )
-    pairs = corpus.withColumn("__cn", norm(F.col("embedding"))).crossJoin(
-        F.broadcast(queries.withColumn("__qn", norm(F.col("qvec"))))
-    )
-    want = pairs.select(
-        "qid",
-        "vec_id",
-        cosine_rounded_prenormed(
-            F.col("qvec"), F.col("embedding"), F.col("__qn"), F.col("__cn")
-        ).alias("score"),
-    )
-    diff = (
-        got.alias("a")
-        .join(want.alias("b"), ["qid", "vec_id"], "full")
-        .filter("a.score IS DISTINCT FROM b.score")
-    )
-    assert diff.count() == 0, diff.collect()[:5]
+    def assert_matches_expression_path(queries, corpus, k):
+        got = brute_force_topk(queries, corpus, k=k).select(
+            "qid", "vec_id", "score"
+        )
+        pairs = corpus.withColumn("__cn", norm(F.col("embedding"))).crossJoin(
+            F.broadcast(queries.withColumn("__qn", norm(F.col("qvec"))))
+        )
+        want = pairs.select(
+            "qid",
+            "vec_id",
+            cosine_rounded_prenormed(
+                F.col("qvec"), F.col("embedding"), F.col("__qn"), F.col("__cn")
+            ).alias("score"),
+        )
+        diff = (
+            got.alias("a")
+            .join(want.alias("b"), ["qid", "vec_id"], "full")
+            .filter("a.score IS DISTINCT FROM b.score")
+        )
+        assert diff.count() == 0, diff.collect()[:5]
+
+    assert_matches_expression_path(queries, corpus, len(corpus_rows))
 
     # double-element corpus exercises the f64 fold branch
     corpus_d = spark.createDataFrame(
@@ -841,22 +849,75 @@ def test_brute_force_numpy_matches_expression_path(spark):
     queries_d = spark.createDataFrame(
         [(7, [0.3, -0.2, 0.9])], "qid long, qvec array<double>"
     )
-    got_d = brute_force_topk(queries_d, corpus_d, k=3).select(
-        "qid", "vec_id", "score"
+    assert_matches_expression_path(queries_d, corpus_d, 3)
+
+    # mixed element types: Spark widens each float×double product to
+    # double, while each side's norm squares in its own element type
+    # (1e30² overflows float32, 1e300 does not fit it at all)
+    mixed = [
+        (7, [0.3, -0.2, 0.9]),
+        (8, [1e30, 1e30, 1.0]),
+        (9, [1e300, 0.1, 0.2]),
+        (10, [1.0000001, -1.0, 1e-40]),
+    ]
+    assert_matches_expression_path(
+        spark.createDataFrame(mixed, "qid long, qvec array<double>"),
+        spark.createDataFrame(
+            [(1, [1.0, 2.0, 3.0]), (2, [0.1, 0.2, 0.3]), (3, [1e19, 1e19, 1.0])],
+            "vec_id long, embedding array<float>",
+        ),
+        3,
     )
-    pairs_d = corpus_d.withColumn("__cn", norm(F.col("embedding"))).crossJoin(
-        F.broadcast(queries_d.withColumn("__qn", norm(F.col("qvec"))))
-    )
-    want_d = pairs_d.select(
-        "qid", "vec_id",
-        cosine_rounded_prenormed(
-            F.col("qvec"), F.col("embedding"), F.col("__qn"), F.col("__cn")
-        ).alias("score"),
-    )
-    assert (
-        got_d.alias("a").join(want_d.alias("b"), ["qid", "vec_id"], "full")
-        .filter("a.score IS DISTINCT FROM b.score").count() == 0
+    assert_matches_expression_path(
+        spark.createDataFrame(
+            [(1, [1.0, 2.0, 3.0]), (2, [1e20, 1e20, 1.0])],
+            "qid long, qvec array<float>",
+        ),
+        spark.createDataFrame(
+            mixed, "vec_id long, embedding array<double>",
+        ),
+        len(mixed),
     )
 
     with pytest.raises(ValueError, match="max_queries"):
         brute_force_topk(queries, corpus, k=2, max_queries=2)
+
+
+def test_brute_force_max_queries_checked_before_collecting_all_queries(spark):
+    """The max_queries guard must stop the driver collect at max_queries + 1
+    rows: query rows past that point fail if they are ever evaluated."""
+    from pdf_parser_benchmark_spark.operators.knn import brute_force_topk
+
+    queries = spark.range(0, 10, 1, numPartitions=1).select(
+        F.col("id").alias("qid"),
+        F.when(F.col("id") >= 3, F.raise_error(F.lit("evaluated past limit")))
+        .otherwise(F.array(F.lit(1.0).cast("float"), F.lit(2.0).cast("float")))
+        .alias("qvec"),
+    )
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="max_queries"):
+        brute_force_topk(queries, corpus, k=1, max_queries=2)
+
+
+def test_knn_searches_with_no_queries_return_empty(spark, sf_dir):
+    """An empty query side is an empty result with the normal schema, for
+    exact and both IVF searches — never an executor crash."""
+    from pdf_parser_benchmark_spark.operators.knn import (
+        brute_force_topk,
+        ivf_topk,
+        ivf_topk_kmeans,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") < 0).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    for out in (
+        brute_force_topk(queries, emb, k=3),
+        ivf_topk(queries, emb, k=3, nprobe=2),
+        ivf_topk_kmeans(queries, emb, k=3, nprobe=2, n_lists=4),
+    ):
+        assert out.columns == ["qid", "vec_id", "score", "rank"]
+        assert out.collect() == []

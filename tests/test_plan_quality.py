@@ -112,11 +112,29 @@ def test_ngram_topk_partial_aggregation(spark, sf_dir):
     assert "partial_count" in plan and "Exchange" in plan
 
 
-def test_ivf_recall_broadcasts_probes(spark, sf_dir):
-    """The recall query's pruned list join must broadcast the tiny probe
-    side, never shuffle the corpus."""
-    plan = _plan(QUERIES["ivf_recall"](spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
+def test_ivf_search_plans_have_no_join_and_one_exchange(spark, sf_dir):
+    """Both IVF searches score the probed lists in one map-side pass over
+    the corpus (the tiny probe side rides in the task closure): one
+    MapInPandas, no join node, and the only Exchange is the top-k
+    window's — the corpus is never shuffled."""
+    import re
+
+    from pdf_parser_benchmark_spark.operators.knn import ivf_topk, ivf_topk_kmeans
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
+    )
+    corpus = emb.filter(F.col("vec_id") >= 5)
+    for out in (
+        ivf_topk(queries, corpus, k=3, nprobe=2),
+        ivf_topk_kmeans(queries, corpus, k=3, nprobe=2, n_lists=4),
+    ):
+        plan = _plan(out)
+        assert "Join" not in plan
+        assert len(re.findall(r"^\(\d+\) MapInPandas", plan, re.M)) == 1
+        assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
+        assert "hashpartitioning(qid" in plan
 
 
 def test_repetition_signals_plan_is_shuffle_free(spark, sf_dir):
