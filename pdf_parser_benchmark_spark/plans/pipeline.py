@@ -1,8 +1,9 @@
 """The flagship extraction pipeline, end to end:
 
     read pages table → assign split buckets → resume-filter vs checkpoint
-    manifest → Arrow-vectorized extraction (mapInPandas) → write
-    partitioned output → lineage counters → mark splits complete.
+    manifest → cache the remaining pages → per commit batch:
+    Arrow-vectorized extraction (mapInPandas) → write partitioned output →
+    mark splits complete → lineage counters.
 
 This is the Spark restatement of the reference's sequential per-book loop
 (/root/reference/src/ingest.py:283-296) — the loop becomes per-partition
@@ -21,7 +22,12 @@ Scale design (north_rule):
   ``salted_host_key``, which split hot hosts across S buckets
   (``concat(host, pmod(xxhash64(url), S))``); AQE skew-join stays on;
 - the heavy stage is mapInPandas: no shuffle after it until the (tiny,
-  pre-aggregated) lineage shuffle.
+  pre-aggregated) lineage shuffle;
+- one read of the input per job: ``run_pipeline`` lists the remaining
+  splits and then commits them in batches, and all of those jobs read one
+  cached copy of the split-tagged pages. The batch filter cannot be pushed
+  into the source instead, because ``split_id`` is a hash of the url the
+  source only knows after parsing (a WARC file holds urls of every split).
 """
 
 from __future__ import annotations
@@ -171,6 +177,16 @@ def run_pipeline(
     crash loses at most one batch of splits; a resumed run anti-joins the
     manifest and redoes only unmarked splits. ``fail_after_batches`` is a
     test hook that simulates a mid-job crash between commits.
+
+    The input is read once per job. The split-tagged, resume-filtered pages
+    are persisted (MEMORY_AND_DISK); the split-listing job materializes them
+    and every commit batch filters that copy. Without it each batch would
+    re-read and re-parse the whole input: ``split_id`` hashes the parsed
+    url, so the batch filter cannot be pushed into the source. The cost:
+    for the length of the job the executors hold one columnar copy of the
+    remaining input in memory, spilling to ``spark.local.dir`` what does
+    not fit. It is released on every way out, a crash inside a batch
+    included.
     """
     if commit_batches < 1:
         raise ValueError(f"commit_batches must be >= 1, got {commit_batches}")
@@ -178,36 +194,41 @@ def run_pipeline(
     df = ckpt.with_split_id(pages, n_splits)
     if resume:
         df = ckpt.filter_resumable(df, spark, manifest_dir, n_splits)
-
-    remaining = sorted(
-        r["split_id"] for r in df.select("split_id").distinct().collect()
-    )
-    if not remaining:
-        return {"run_id": run_id, "docs": 0, "errors": 0, "bytes_in": 0,
-                "html_docs": 0, "pdf_docs": 0, "splits_done": 0}
-
-    batch_size = max(1, -(-len(remaining) // commit_batches))
-    batches = [
-        remaining[i : i + batch_size] for i in range(0, len(remaining), batch_size)
-    ]
+    # read the input once: the split listing fills the cache, batches filter it
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     done_splits: list[int] = []
-    for bi, split_batch in enumerate(batches):
-        if fail_after_batches is not None and bi >= fail_after_batches:
-            break  # simulated crash: manifest only covers committed batches
-        part = df.filter(F.col("split_id").isin(split_batch))
-        extracted = extract_splits(part, n_tasks)
-        # persist so the write and the manifest aggregates share ONE
-        # extraction pass — re-reading the output directory per batch costs
-        # a driver-side file listing that grows with files-per-batch (real
-        # at 10^5 output files), and re-aggregating the un-persisted plan
-        # would run the extraction twice
-        extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            write_extracted(extracted, output_dir)  # dynamic overwrite by split
-            ckpt.mark_splits_complete(extracted, manifest_dir, run_id, n_splits)
-        finally:
-            extracted.unpersist()
-        done_splits.extend(split_batch)
+    try:
+        remaining = sorted(
+            r["split_id"] for r in df.select("split_id").distinct().collect()
+        )
+        if not remaining:
+            return {"run_id": run_id, "docs": 0, "errors": 0, "bytes_in": 0,
+                    "html_docs": 0, "pdf_docs": 0, "splits_done": 0}
+
+        batch_size = max(1, -(-len(remaining) // commit_batches))
+        batches = [
+            remaining[i : i + batch_size]
+            for i in range(0, len(remaining), batch_size)
+        ]
+        for bi, split_batch in enumerate(batches):
+            if fail_after_batches is not None and bi >= fail_after_batches:
+                break  # simulated crash: manifest only covers committed batches
+            part = df.filter(F.col("split_id").isin(split_batch))
+            extracted = extract_splits(part, n_tasks)
+            # persist so the write and the manifest aggregates share ONE
+            # extraction pass — re-reading the output directory per batch
+            # costs a driver-side file listing that grows with
+            # files-per-batch (real at 10^5 output files), and re-aggregating
+            # the un-persisted plan would run the extraction twice
+            extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                write_extracted(extracted, output_dir)  # dynamic overwrite by split
+                ckpt.mark_splits_complete(extracted, manifest_dir, run_id, n_splits)
+            finally:
+                extracted.unpersist()
+            done_splits.extend(split_batch)
+    finally:
+        df.unpersist()
 
     written = read_extracted(spark, output_dir).filter(
         F.col("split_id").isin(done_splits)

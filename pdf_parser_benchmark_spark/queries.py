@@ -65,24 +65,32 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _parquet_disk_bytes(sf_dir: str, name: str) -> int:
-    """On-disk size of a testdata table (file or directory-style parquet) —
-    the scan-level statistic used for scale-adaptive plan choices when the
-    planner's own estimate can't see through a join. Returns a huge
-    sentinel when the path isn't local/statable, so size-gated broadcast
-    hints silently stay OFF."""
+    """On-disk size of a testdata table (file or directory-style parquet,
+    partition subdirectories included) — the scan-level statistic used for
+    scale-adaptive plan choices when the planner's own estimate can't see
+    through a join. Entries starting with ``.`` or ``_`` (checksums,
+    ``_SUCCESS``, ``_temporary/``) are skipped at every level, as Spark's
+    file index skips them. Returns a huge sentinel when the path isn't
+    local/statable, so size-gated broadcast hints silently stay OFF."""
     import os
 
     p = f"{sf_dir}/{name}.parquet"
     try:
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(p, f))
-                for f in os.listdir(p)
-                if not f.startswith((".", "_"))
-            )
-        return os.path.getsize(p)
+        return _tree_bytes(p) if os.path.isdir(p) else os.path.getsize(p)
     except OSError:
         return 1 << 60
+
+
+def _tree_bytes(path: str) -> int:
+    import os
+
+    total = 0
+    with os.scandir(path) as entries:
+        for e in entries:
+            if e.name.startswith((".", "_")):
+                continue
+            total += _tree_bytes(e.path) if e.is_dir() else e.stat().st_size
+    return total
 
 
 def query(name: str, oracle: str | None = None):
@@ -3043,15 +3051,16 @@ def q_tpch_q3(spark: SparkSession, sf: str) -> DataFrame:
     statistic auto-broadcast uses; both orders produce identical results
     by inner-join associativity):
 
-    - orders under the broadcast threshold → the planner's own shape,
-      lineitem ⋈ broadcast(orders) ⋈ broadcast(customer): one pass over
-      lineitem, no shuffle before the aggregation, both broadcasts built
-      concurrently.
+    - orders under the session's ``spark.sql.autoBroadcastJoinThreshold``
+      → the planner's own shape, lineitem ⋈ broadcast(orders) ⋈
+      broadcast(customer): one pass over lineitem, no shuffle before the
+      aggregation, both broadcasts built concurrently.
     - orders past the threshold (bench sf1.0-scale: ~26-37 MB, and any
-      cluster scale) → apply the selective BUILDING filter to orders
-      FIRST, so the fact table joins a ~1/5-of-orders key projection
-      instead of all orders. In that regime the old shape either builds
-      and probes a full-orders hashed relation (the column-pruned scan
+      cluster scale), or broadcast disabled (threshold <= 0) → apply the
+      selective BUILDING filter to orders FIRST, so the fact table joins a
+      ~1/5-of-orders key projection instead of all orders. In that regime
+      the old shape either builds and probes a full-orders hashed relation
+      (the column-pruned scan
       estimate can still sneak under the threshold — measured: a 1.5M-row
       broadcast build) or falls to a sort-merge shuffle of every lineitem
       row; with the reduced side, AQE's runtime size check converts the
@@ -3064,8 +3073,9 @@ def q_tpch_q3(spark: SparkSession, sf: str) -> DataFrame:
     o = _t(spark, sf, "orders")
     l = _t(spark, sf, "lineitem")
     dec = lambda col: F.col(col).cast("decimal(18,2)")
-    bthresh = 10 << 20  # spark.sql.autoBroadcastJoinThreshold default
-    if _parquet_disk_bytes(sf, "orders") <= bthresh:
+    # spark.sql.autoBroadcastJoinThreshold as Spark parses it; <= 0 disables
+    bthresh = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if bthresh > 0 and _parquet_disk_bytes(sf, "orders") <= bthresh:
         joined = l.join(o, l.l_orderkey == o.o_orderkey).join(
             F.broadcast(c), o.o_custkey == c.c_custkey
         )

@@ -83,12 +83,26 @@ def _strip_http_headers(payload: bytes) -> bytes:
     return payload[sep + 4 :]
 
 
-def parse_warc_file(data: bytes) -> list[dict]:
-    """One WARC file (plain or per-record-gzip) → pages-schema row dicts."""
+def _plain_bytes(data: bytes) -> bytes:
+    """A WARC file's bytes, with per-record gzip members decompressed."""
     if data[:2] == _GZIP_MAGIC:
-        plain = b"".join(split_gzip_members(data))
-    else:
-        plain = data
+        return b"".join(split_gzip_members(data))
+    return data
+
+
+def _warc_ts(headers: dict) -> datetime | None:
+    raw_ts = headers.get("warc-date")
+    if raw_ts:
+        try:
+            return datetime.strptime(raw_ts, "%Y-%m-%dT%H:%M:%SZ")
+        except ValueError:
+            return None
+    return None
+
+
+def _page_rows(plain: bytes) -> list[dict]:
+    """Plain WARC bytes → one pages-schema row per response record that
+    names its target uri; every other record is skipped."""
     rows: list[dict] = []
     for headers, payload in iter_warc_records(plain):
         if headers.get("warc-type") != "response":
@@ -96,18 +110,16 @@ def parse_warc_file(data: bytes) -> list[dict]:
         url = headers.get("warc-target-uri")
         if not url:
             continue
-        ts = None
-        raw_ts = headers.get("warc-date")
-        if raw_ts:
-            try:
-                ts = datetime.strptime(raw_ts, "%Y-%m-%dT%H:%M:%SZ")
-            except ValueError:
-                ts = None
-        body = _strip_http_headers(payload)
-        rows.append(
-            {"url": url, "warc_ts": ts, "html": body, "text": None, "lang": None}
-        )
+        rows.append({
+            "url": url, "warc_ts": _warc_ts(headers),
+            "html": _strip_http_headers(payload), "text": None, "lang": None,
+        })
     return rows
+
+
+def parse_warc_file(data: bytes) -> list[dict]:
+    """One WARC file (plain or per-record-gzip) → pages-schema row dicts."""
+    return _page_rows(_plain_bytes(data))
 
 
 def parse_wet_file(data: bytes) -> list[dict]:
@@ -115,26 +127,15 @@ def parse_wet_file(data: bytes) -> list[dict]:
     records with text/plain payloads) → (url, warc_ts, text) row dicts.
     Same tolerant record walk as parse_warc_file; non-conversion records
     (warcinfo, metadata) are skipped."""
-    if data[:2] == _GZIP_MAGIC:
-        plain = b"".join(split_gzip_members(data))
-    else:
-        plain = data
     rows: list[dict] = []
-    for headers, payload in iter_warc_records(plain):
+    for headers, payload in iter_warc_records(_plain_bytes(data)):
         if headers.get("warc-type") != "conversion":
             continue
         url = headers.get("warc-target-uri")
         if not url:
             continue
-        ts = None
-        raw_ts = headers.get("warc-date")
-        if raw_ts:
-            try:
-                ts = datetime.strptime(raw_ts, "%Y-%m-%dT%H:%M:%SZ")
-            except ValueError:
-                ts = None
         rows.append({
-            "url": url, "warc_ts": ts,
+            "url": url, "warc_ts": _warc_ts(headers),
             "text": payload.decode("utf-8", errors="replace"),
         })
     return rows
@@ -226,30 +227,7 @@ def read_warc_pages_split(
                                 plain = b"".join(split_gzip_members(raw))
                             except Exception:
                                 continue  # malformed member: skip, never fatal
-                            for headers, payload in iter_warc_records(plain):
-                                if headers.get("warc-type") != "response":
-                                    continue
-                                url = headers.get("warc-target-uri")
-                                if not url:
-                                    continue
-                                ts = None
-                                raw_ts = headers.get("warc-date")
-                                if raw_ts:
-                                    try:
-                                        ts = datetime.strptime(
-                                            raw_ts, "%Y-%m-%dT%H:%M:%SZ"
-                                        )
-                                    except ValueError:
-                                        ts = None
-                                out.append(
-                                    {
-                                        "url": url,
-                                        "warc_ts": ts,
-                                        "html": _strip_http_headers(payload),
-                                        "text": None,
-                                        "lang": None,
-                                    }
-                                )
+                            out.extend(_page_rows(plain))
                 except OSError:
                     continue
             yield pd.DataFrame(

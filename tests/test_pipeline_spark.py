@@ -74,6 +74,50 @@ def test_crash_resume_byte_identity(spark, pages, tmp_path):
     assert r3["splits_done"] == 0  # idempotent noop
 
 
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_run_pipeline_reads_input_once_and_uncaches(spark, pages, tmp_path, monkeypatch):
+    """The split listing and every commit batch share one evaluation of the
+    input, and the job leaves nothing in Spark's cache on any way out:
+    normal return, simulated crash, no-op re-run, error inside a batch."""
+    from pdf_parser_benchmark_spark.plans import pipeline
+
+    rows_read = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for b in batches:
+            rows_read.add(len(b))
+            yield b
+
+    counted = pages.mapInPandas(count_rows, schema=pages.schema)
+    out, mani = str(tmp_path / "outE"), str(tmp_path / "maniE")
+    spark.catalog.clearCache()
+
+    run_pipeline(spark, counted, out, mani, n_splits=8, commit_batches=4)
+    assert rows_read.value == N_ROWS
+    assert _cache_is_empty(spark)
+
+    out_b, mani_b = str(tmp_path / "outF"), str(tmp_path / "maniF")
+    r1 = run_pipeline(spark, pages, out_b, mani_b, n_splits=8,
+                      commit_batches=4, fail_after_batches=2)
+    assert 0 < r1["splits_done"] < 8
+    assert _cache_is_empty(spark)
+
+    assert run_pipeline(spark, pages, out, mani, n_splits=8)["splits_done"] == 0
+    assert _cache_is_empty(spark)
+
+    def broken_write(df, output_dir):
+        raise RuntimeError("write failed")
+
+    monkeypatch.setattr(pipeline, "write_extracted", broken_write)
+    with pytest.raises(RuntimeError, match="write failed"):
+        run_pipeline(spark, pages, str(tmp_path / "outG"),
+                     str(tmp_path / "maniG"), n_splits=8)
+    assert _cache_is_empty(spark)
+
+
 @pytest.mark.parametrize(
     "bad", [{"commit_batches": 0}, {"n_splits": 0}, {"n_splits": -8}],
     ids=["commit_batches=0", "n_splits=0", "n_splits=-8"],

@@ -3,6 +3,7 @@ broadcast, the extraction plan is shuffle-free, whole-stage codegen covers
 the relational queries. These pin the *plan shape* that makes the 100 TB
 story true, not just the small-scale results."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_parser_benchmark_spark.queries import QUERIES
@@ -52,6 +53,31 @@ def test_extraction_plan_is_shuffle_free(spark):
     simple = _plan(df, "simple")
     assert simple.count("MapInPandas _extract_batches(") == 1
     assert simple.count("_extract_batches") == 1
+
+
+@pytest.mark.parametrize(
+    "threshold, top_join_key",
+    [(None, "o_custkey"), ("1", "l_orderkey"), ("-1", "l_orderkey")],
+    ids=["default", "1-byte", "disabled"],
+)
+def test_tpch_q3_join_order_follows_broadcast_threshold(
+    spark, sf_dir, threshold, top_join_key
+):
+    """tpch_q3 reads spark.sql.autoBroadcastJoinThreshold from the session:
+    at sf0.001 orders fits the default, so lineitem joins all of orders and
+    the BUILDING customers are joined last; a threshold below the orders
+    size, or <= 0 (broadcast off), takes the reduced side, where customers
+    filter orders first and lineitem is joined last."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        plan = _plan(QUERIES["tpch_q3_topk"](spark, sf_dir), "simple")
+    finally:
+        spark.conf.set(key, before)
+    top_join = next(ln for ln in plan.splitlines() if "Join [" in ln)
+    assert f"[{top_join_key}#" in top_join, top_join
 
 
 def test_tpch_q1_partial_aggregation(spark, sf_dir):

@@ -4,7 +4,7 @@ independent brute-force restatement on random inputs."""
 
 from collections import Counter
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pdf_parser_benchmark_spark.canonical import canonical_json
 from pdf_parser_benchmark_spark.extract.assemble import (
@@ -101,3 +101,42 @@ def test_canonical_json_stable_and_parseable(obj):
     a = canonical_json(obj)
     assert a == canonical_json(obj)
     assert json.loads(a) == obj
+
+
+_table_dirs = st.sampled_from(["x=1", "x=2", "y=a", "_temporary", ".staging"])
+_table_files = st.sampled_from(
+    ["part-0.parquet", "part-1.parquet", "_SUCCESS", "_metadata",
+     ".part-0.parquet.crc"]
+)
+
+
+@given(st.dictionaries(
+    st.tuples(st.lists(_table_dirs, max_size=3).map(tuple), _table_files),
+    st.integers(0, 300),
+    max_size=12,
+))
+@example({(("x=1",), "part-0.parquet"): 100, (("x=2",), "part-0.parquet"): 50,
+          ((), "_SUCCESS"): 0})
+@settings(max_examples=40, deadline=None)
+def test_parquet_disk_bytes_walks_nested_table(tree):
+    """A partitioned table (orders.parquet/x=1/part-*.parquet) weighs the
+    bytes of every data file under it; entries starting with '.' or '_'
+    are skipped at every level, like Spark's file index skips them."""
+    import os
+    import tempfile
+
+    from pdf_parser_benchmark_spark.queries import _parquet_disk_bytes
+
+    with tempfile.TemporaryDirectory() as sf_dir:
+        root = os.path.join(sf_dir, "orders.parquet")
+        os.makedirs(root)
+        for (dirs, name), size in tree.items():
+            d = os.path.join(root, *dirs)
+            os.makedirs(d, exist_ok=True)
+            with open(os.path.join(d, name), "wb") as f:
+                f.write(b"\0" * size)
+        expected = sum(
+            size for (dirs, name), size in tree.items()
+            if not any(part.startswith((".", "_")) for part in (*dirs, name))
+        )
+        assert _parquet_disk_bytes(sf_dir, "orders") == expected
