@@ -26,6 +26,56 @@ WINDOW_SIZE = 50
 # name -> last round with a green driver CORRECTNESS row (generated; do not
 # hand-edit — run tools/update_driver_window.py).
 LAST_GREEN = {
+    "bloom_contamination": 7,
+    "bm25_topk": 7,
+    "c4_filters": 7,
+    "ccitt_decode": 7,
+    "cms_topk": 7,
+    "contamination_check": 7,
+    "crawl_frontier": 7,
+    "curation_pipeline": 7,
+    "dedup_clusters": 7,
+    "dedup_clusters_2p": 7,
+    "doc_fingerprint": 7,
+    "domain_mix": 7,
+    "dup_paragraphs": 7,
+    "dup_spans": 7,
+    "edu_score": 7,
+    "embedding_neardup_rh": 7,
+    "exact_quantiles": 7,
+    "gopher_rules": 7,
+    "hash_embeddings": 7,
+    "hll_distinct": 7,
+    "host_indegree_all": 7,
+    "ivf_recall": 7,
+    "ivfpq_topk": 7,
+    "jbig2_decode": 7,
+    "lang_id": 7,
+    "lang_id3": 7,
+    "media_refs": 7,
+    "minhash_neardup_xx": 7,
+    "pagerank": 7,
+    "pdf_link_graph": 7,
+    "perplexity_tiers": 7,
+    "priority_sample": 7,
+    "repetition_signals": 7,
+    "rerank_blend": 7,
+    "robots_filter": 7,
+    "robots_txt_gate": 7,
+    "script_detect": 7,
+    "semdedup": 7,
+    "semi_join_customers": 7,
+    "sequence_pack": 7,
+    "sequence_pack_greedy": 7,
+    "sessionize": 7,
+    "set_ops_sources": 7,
+    "sitemap_frontier": 7,
+    "strip_dup_paragraphs": 7,
+    "strip_dup_spans": 7,
+    "tpch_q1_pricing": 7,
+    "tpch_q3_topk": 7,
+    "tpch_q5_volume": 7,
+    "windowed_event_counts": 7,
     "adaptive_retry_topk": 5,
     "ann_ivf_kmeans_topk": 5,
     "ann_ivf_topk": 5,
@@ -76,56 +126,27 @@ LAST_GREEN = {
     "topk_cosine": 5,
     "topk_per_group": 5,
     "two_path_union": 5,
-    "contamination_check": 4,
     "count_distinct_orders": 4,
-    "crawl_frontier": 4,
-    "dedup_clusters": 4,
-    "dedup_clusters_2p": 4,
-    "doc_fingerprint": 4,
-    "dup_paragraphs": 4,
-    "embedding_neardup_rh": 4,
     "excerpts": 4,
     "extract_digest": 4,
     "extract_pipeline": 4,
     "frame_sample": 4,
-    "gopher_rules": 4,
-    "hash_embeddings": 4,
     "hash_sample": 4,
-    "host_indegree_all": 4,
-    "ivf_recall": 4,
-    "lang_id": 4,
-    "lang_id3": 4,
-    "media_refs": 4,
     "median_value_by_type": 4,
-    "minhash_neardup_xx": 4,
     "multimodal_decode": 4,
     "ngram_topk": 4,
-    "pdf_link_graph": 4,
     "pii_redact": 4,
     "pivot_status_qty": 4,
-    "robots_filter": 4,
-    "robots_txt_gate": 4,
     "rollup_revenue": 4,
     "salted_agg": 4,
     "salted_join": 4,
-    "script_detect": 4,
-    "semi_join_customers": 4,
-    "sessionize": 4,
-    "set_ops_sources": 4,
-    "sitemap_frontier": 4,
     "sql_api_pricing": 4,
     "sql_api_topk": 4,
-    "strip_dup_paragraphs": 4,
     "tpch_q10_returns": 4,
-    "tpch_q1_pricing": 4,
-    "tpch_q3_topk": 4,
     "tpch_q4_priority": 4,
-    "tpch_q5_volume": 4,
     "tpch_q6_forecast": 4,
     "url_canonicalize": 4,
     "url_dedup": 4,
-    "windowed_event_counts": 4,
-    "repetition_signals": 3,
 }
 
 

@@ -1178,11 +1178,6 @@ _CS_TOKEN = re.compile(
 )
 
 
-def _tokenize_content(data: bytes):
-    for m in _CS_TOKEN.finditer(data):
-        yield m.group()
-
-
 _OPERAND_FIRST = frozenset(b"(</+-.0123456789")
 
 

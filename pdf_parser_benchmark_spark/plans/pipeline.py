@@ -13,8 +13,8 @@ partitioned, resumable table write.
 
 Scale design (north_rule):
 - one kernel: ``_extract_batches`` is the only per-doc loop and
-  ``extract_splits`` its only call site — batch, resumable and streaming
-  paths all go through it, so every path emits the same bytes;
+  ``extract_splits`` its only call site — batch and resumable paths both
+  go through it, so every path emits the same bytes;
 - parallelism: zero-shuffle by default — task granularity comes from the
   input splits; ``n_tasks`` forces a repartition whose only key is
   ``xxhash64(url)``, uniform regardless of the zipf host distribution;

@@ -43,9 +43,10 @@ ORACLES: dict[str, str] = {}
 # cached object is an UNEVALUATED DataFrame (a logical plan + file index):
 # no rows, no results — every action still computes from the parquet
 # files (the guide's §6 file-listing-cache point, applied at the reader
-# level). Keyed on (application, path, mtime_ns, size) so a rewritten
-# table gets a fresh plan.
-_TABLE_PLANS: dict[tuple, DataFrame] = {}
+# level). Keyed on the path alone, holding one plan per table: a plan built
+# under another application, or over a table since rewritten (different
+# mtime_ns or size), is replaced, so the memo never outgrows the tables read.
+_TABLE_PLANS: dict[str, tuple[tuple, DataFrame]] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -56,11 +57,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         st = os.stat(p)
     except OSError:
         return spark.read.parquet(p)
-    key = (spark.sparkContext.applicationId, p, st.st_mtime_ns, st.st_size)
-    df = _TABLE_PLANS.get(key)
-    if df is None:
-        df = spark.read.parquet(p)
-        _TABLE_PLANS[key] = df
+    stamp = (spark.sparkContext.applicationId, st.st_mtime_ns, st.st_size)
+    hit = _TABLE_PLANS.get(p)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    df = spark.read.parquet(p)
+    _TABLE_PLANS[p] = (stamp, df)
     return df
 
 
@@ -710,8 +712,7 @@ def q_sessionize(spark: SparkSession, sf: str) -> DataFrame:
 FROM events GROUP BY 1, 2""",
 )
 def q_windowed_event_counts(spark: SparkSession, sf: str) -> DataFrame:
-    """Tumbling 1h window aggregation — the batch twin of the streaming
-    windowed agg in streaming/ (same F.window expression)."""
+    """Tumbling 1h window aggregation (F.window)."""
     ev = _t(spark, sf, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

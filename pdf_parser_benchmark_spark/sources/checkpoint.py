@@ -11,12 +11,7 @@ A *split* is a deterministic bucket of urls: ``pmod(xxhash64(url), n_splits)``
 at different parallelism skips exactly the work a previous run committed.
 Each manifest row records the ``n_splits`` it was computed under: split 3
 of 64 is NOT split 3 of 128, so resume ignores rows from a different
-bucketing rather than silently skipping the wrong url set. Bucketing
-sentinel convention: NEGATIVE n_splits marks split ids that are NOT plain
-url-hash buckets — the streaming ingest records batch-namespaced splits as
-``n_splits = -N`` so a batch resume on ``n_splits = N`` never confuses
-"stream processed batch k's files" with "hash bucket complete" (r5,
-ADVICE r4 interop fix).
+bucketing rather than silently skipping the wrong url set.
 
 Write protocol (idempotence, SURVEY.md §7 hard-part 4): output is written
 partitioned-by-split with dynamic partition overwrite FIRST, the manifest

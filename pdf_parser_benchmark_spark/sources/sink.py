@@ -13,14 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.org.apache.iceberg.Schema  # noqa: SLF001 — presence probe
-        return True
-    except Exception:
-        return False
-
-
 def is_table_identifier(path_or_table: str) -> bool:
     """catalog.db.table → Iceberg table; anything path-like → parquet."""
     return path_or_table.count(".") >= 2 and not path_or_table.startswith("/")

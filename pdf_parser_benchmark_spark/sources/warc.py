@@ -83,13 +83,6 @@ def _strip_http_headers(payload: bytes) -> bytes:
     return payload[sep + 4 :]
 
 
-def _plain_bytes(data: bytes) -> bytes:
-    """A WARC file's bytes, with per-record gzip members decompressed."""
-    if data[:2] == _GZIP_MAGIC:
-        return b"".join(split_gzip_members(data))
-    return data
-
-
 def _warc_ts(headers: dict) -> datetime | None:
     raw_ts = headers.get("warc-date")
     if raw_ts:
@@ -119,50 +112,9 @@ def _page_rows(plain: bytes) -> list[dict]:
 
 def parse_warc_file(data: bytes) -> list[dict]:
     """One WARC file (plain or per-record-gzip) → pages-schema row dicts."""
-    return _page_rows(_plain_bytes(data))
-
-
-def parse_wet_file(data: bytes) -> list[dict]:
-    """One WET file (Common Crawl's extracted-text sidecar: `conversion`
-    records with text/plain payloads) → (url, warc_ts, text) row dicts.
-    Same tolerant record walk as parse_warc_file; non-conversion records
-    (warcinfo, metadata) are skipped."""
-    rows: list[dict] = []
-    for headers, payload in iter_warc_records(_plain_bytes(data)):
-        if headers.get("warc-type") != "conversion":
-            continue
-        url = headers.get("warc-target-uri")
-        if not url:
-            continue
-        rows.append({
-            "url": url, "warc_ts": _warc_ts(headers),
-            "text": payload.decode("utf-8", errors="replace"),
-        })
-    return rows
-
-
-def read_wet_documents(spark: SparkSession, path_glob: str) -> DataFrame:
-    """Distributed WET ingestion → (url, warc_ts, text) — the direct text
-    input for the curation/dedup/tier operators when the corpus ships as
-    Common Crawl WET instead of raw WARC. File-granular tasks, zero
-    shuffle, malformed files skipped."""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(path_glob).select("content")
-
-    def split(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for b in batches:
-            out: list[dict] = []
-            for content in b["content"]:
-                try:
-                    out.extend(parse_wet_file(bytes(content)))
-                except Exception:
-                    continue
-            yield pd.DataFrame(out, columns=["url", "warc_ts", "text"])
-
-    return files.mapInPandas(
-        split, schema="url string, warc_ts timestamp, text string"
-    )
+    if data[:2] == _GZIP_MAGIC:
+        data = b"".join(split_gzip_members(data))
+    return _page_rows(data)
 
 
 def build_member_index(data: bytes) -> list[tuple[int, int]]:

@@ -55,40 +55,6 @@ def warcinfo_record(ts: datetime) -> bytes:
     )
 
 
-def wet_conversion_record(url: str, text: str, ts: datetime) -> bytes:
-    """WET `conversion` record (the Common-Crawl extracted-text sidecar
-    format): plain-text payload, WARC-Refers-To-style linkage omitted."""
-    body = text.encode("utf-8")
-    headers = (
-        b"WARC/1.0\r\n"
-        b"WARC-Type: conversion\r\n"
-        + b"WARC-Target-URI: " + url.encode("ascii") + b"\r\n"
-        + b"WARC-Date: " + ts.strftime("%Y-%m-%dT%H:%M:%SZ").encode("ascii")
-        + b"\r\n"
-        + b"Content-Type: text/plain\r\n"
-        + b"Content-Length: " + str(len(body)).encode("ascii") + b"\r\n"
-        + b"\r\n"
-    )
-    return headers + body + b"\r\n\r\n"
-
-
-def build_wet(rows: list[dict], gzip_members: bool = False) -> bytes:
-    """rows: dicts with url, text (str), warc_ts (datetime) → a .wet /
-    .wet.gz byte stream (warcinfo first, one conversion record per row)."""
-    records = [
-        warcinfo_record(rows[0]["warc_ts"] if rows else datetime(2026, 1, 1))
-    ]
-    for r in rows:
-        records.append(
-            wet_conversion_record(r["url"], r["text"], r["warc_ts"])
-        )
-    if not gzip_members:
-        return b"".join(records)
-    return b"".join(
-        gzip.compress(rec, compresslevel=6, mtime=0) for rec in records
-    )
-
-
 def build_warc(
     rows: list[dict], gzip_members: bool = False
 ) -> bytes:

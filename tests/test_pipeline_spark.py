@@ -193,38 +193,6 @@ def test_manifest_compaction(spark, pages, tmp_path):
     assert r["splits_done"] == 0
 
 
-def test_output_compaction(spark, pages, tmp_path):
-    from pdf_parser_benchmark_spark.sources.compact import (
-        compact_output,
-        output_file_stats,
-    )
-
-    out, mani = str(tmp_path / "outD"), str(tmp_path / "maniD")
-    run_pipeline(spark, pages, out, mani, n_splits=4, commit_batches=4,
-                 n_tasks=8)
-    # r5: write_extracted now colocates splits (no small-files blowup), so
-    # fragmentation must be synthesized: split every split's single file
-    # into per-row appends, the state a foreign writer (or many tiny
-    # incremental batches) leaves behind
-    rows = spark.read.parquet(out)
-    out = str(tmp_path / "outD_frag")
-    half_a = rows.filter(F.crc32(F.col("url")) % 2 == 0)
-    half_b = rows.filter(F.crc32(F.col("url")) % 2 == 1)
-    half_a.write.mode("append").partitionBy("split_id").parquet(out)
-    half_b.write.mode("append").partitionBy("split_id").parquet(out)
-    before = {r["split_id"]: r["n_files"]
-              for r in output_file_stats(spark, out).collect()}
-    assert any(n > 1 for n in before.values())
-    content_before = _canon_map(spark.read.parquet(out))
-
-    res = compact_output(spark, out, min_files=2)
-    assert res["compacted_splits"] >= 1
-    after = {r["split_id"]: r["n_files"]
-             for r in output_file_stats(spark, out).collect()}
-    assert all(n == 1 for n in after.values())
-    assert _canon_map(spark.read.parquet(out)) == content_before
-
-
 def test_iceberg_sink_per_partition_replace_contract(spark, monkeypatch):
     """Pin the Iceberg write mode without the runtime jar: an existing table
     must get overwritePartitions() (replace exactly the written splits),

@@ -140,3 +140,23 @@ def test_parquet_disk_bytes_walks_nested_table(tree):
             if not any(part.startswith((".", "_")) for part in (*dirs, name))
         )
         assert _parquet_disk_bytes(sf_dir, "orders") == expected
+
+
+def test_table_plan_memo_replaces_rewritten_table(spark, tmp_path, monkeypatch):
+    """The testdata plan memo holds one plan per table path: rewriting the
+    table replaces its entry (no growth per rewrite), and the returned plan
+    reads the new file, not the old one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdf_parser_benchmark_spark import queries
+
+    monkeypatch.setattr(queries, "_TABLE_PLANS", {})
+    path = tmp_path / "events.parquet"
+    pq.write_table(pa.table({"v": [1, 2, 3]}), path)
+    assert queries._t(spark, str(tmp_path), "events").count() == 3
+
+    pq.write_table(pa.table({"v": [10, 20, 30, 40, 50]}), path)
+    df = queries._t(spark, str(tmp_path), "events")
+    assert len(queries._TABLE_PLANS) == 1
+    assert sorted(r["v"] for r in df.collect()) == [10, 20, 30, 40, 50]

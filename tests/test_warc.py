@@ -108,45 +108,3 @@ def test_member_offset_split_parity_and_parallelism(spark, rows, tmp_path):
         .select("pid").distinct().count()
     )
     assert parts >= 4
-
-
-def test_wet_roundtrip_and_spark_read(spark, rows, tmp_path):
-    from datetime import datetime
-
-    from pdf_parser_benchmark_spark.sources.warc import (
-        parse_wet_file,
-        read_wet_documents,
-    )
-    from pdf_parser_benchmark_spark.synth.warc_writer import build_wet
-
-    wet_rows = [
-        {"url": r["url"], "warc_ts": r["warc_ts"],
-         "text": f"extracted text of {r['url']} — ünïcode ✓ line\nsecond"}
-        for r in rows
-    ]
-    for gz, name in ((False, "a.wet"), (True, "b.wet.gz")):
-        data = build_wet(wet_rows, gzip_members=gz)
-        got = parse_wet_file(data)
-        assert len(got) == len(wet_rows)  # warcinfo skipped
-        for orig, back in zip(wet_rows, got):
-            assert back["url"] == orig["url"]
-            assert back["text"] == orig["text"]
-            assert back["warc_ts"] == orig["warc_ts"].replace(microsecond=0)
-        (tmp_path / name).write_bytes(data)
-
-    df = read_wet_documents(spark, str(tmp_path / "*.wet*"))
-    assert df.count() == 2 * len(wet_rows)
-    one = df.filter(df.url == wet_rows[0]["url"]).collect()
-    assert len(one) == 2
-    assert all(r["text"] == wet_rows[0]["text"] for r in one)
-
-
-def test_wet_non_conversion_records_skipped():
-    from pdf_parser_benchmark_spark.sources.warc import parse_wet_file
-    from pdf_parser_benchmark_spark.synth.warc_writer import build_warc
-
-    # a WARC (response records) parsed as WET yields nothing
-    from pdf_parser_benchmark_spark.synth.pages import generate_pages_local
-
-    data = build_warc(generate_pages_local(3), gzip_members=False)
-    assert parse_wet_file(data) == []
