@@ -22,7 +22,6 @@ SURFACES = [
     f"{PKG}/queries.py",
     f"{PKG}/plans/job.py",
     "bench.py",
-    "bench_extra.py",
     *sorted(os.path.relpath(p, ROOT) for p in glob.glob(f"{ROOT}/perfbench/*.py")),
     *sorted(os.path.relpath(p, ROOT) for p in glob.glob(f"{ROOT}/tools/*.py")),
 ]

@@ -25,9 +25,11 @@ Output: pdf_parser_benchmark_spark/pinned_oracles.py (generated, committed).
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 
@@ -112,7 +114,7 @@ def main() -> int:
             f"SELECT {col_list} FROM pin JOIN key USING (k)"
         )
 
-    out_path = "/root/repo/pdf_parser_benchmark_spark/pinned_oracles.py"
+    out_path = os.path.join(ROOT, "pdf_parser_benchmark_spark", "pinned_oracles.py")
     with open(out_path, "w") as f:
         f.write(
             '"""GENERATED by tools/gen_pinned.py - DO NOT EDIT BY HAND.\n\n'

@@ -1,7 +1,7 @@
 """Regenerate pdf_parser_benchmark_spark/driver_window.py's LAST_GREEN table
 from the CORRECTNESS_r*.json files the driver writes each round.
 
-Usage: python tools/update_driver_window.py   (from the repo root)
+Usage: python tools/update_driver_window.py
 
 A query counts as driver-green in round N if its value hash matched, or —
 for rows-only-by-design queries (err == 'no_oracle') — if the driver saw a
@@ -14,16 +14,18 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def compute_last_green() -> dict[str, int]:
     last: dict[str, int] = {}
-    for path in sorted(glob.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", path).group(1))
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
+        rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
         data = json.load(open(path))
         for name, row in data.items():
             green = bool(row.get("hash_match")) or (
