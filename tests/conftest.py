@@ -7,8 +7,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_TEST = "/root/testdata/sf0.001"
 
-# session.py's 48g default driver heap lets a full run's JVM outgrow the RAM
-# of a small box and be OOM-killed; 6g holds the whole suite
+# session.py's default driver heap is three quarters of physical RAM; 6g
+# holds the whole suite and leaves room for the test subprocesses' JVMs
 os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
 
 

@@ -12,7 +12,7 @@ TOOL = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                     "tools", "lane_profile.py")
 
 LAYER_FIELDS = (
-    "wall_s", "stage_s", "driver_s", "jobs", "untagged_jobs", "python_worker_s",
+    "wall_s", "stage_s", "driver_s", "jobs", "untagged_jobs", "python_worker_s", "python_tasks",
     "arrow_bytes_sent", "arrow_bytes_returned", "shuffle_bytes", "gc_s", "spill_bytes",
 )
 
@@ -46,6 +46,7 @@ def test_cores_levels_give_equal_fingerprints(tmp_path):
     fps = {r["cores"]: (r["check"]["docs"], r["check"]["fingerprint"]) for r in doc["lanes"]}
     assert set(fps) == {1, 2}
     assert fps[1] == fps[2] and fps[1][0] == 200
+    assert all(r["python_tasks"] > 0 for r in doc["lanes"])
     (scaling,) = doc["scaling"]
     assert scaling["check_identical"] and scaling["cores"] == [1, 2]
     assert scaling["efficiency"][0] == 1.0 and scaling["efficiency"][1] > 0

@@ -34,7 +34,9 @@ event log on. Each lane gives one JSON row:
 * ``driver_s``: the runs' wall time outside every Spark job (planning, file
   listing, py4j, the gaps between jobs);
 * ``python_worker_s``, ``arrow_bytes_sent``, ``arrow_bytes_returned``,
-  ``shuffle_bytes``, ``gc_s`` and ``spill_bytes`` of those jobs' stages.
+  ``shuffle_bytes``, ``gc_s`` and ``spill_bytes`` of those jobs' stages;
+* ``python_tasks``: the tasks of those stages that ran a Python-worker node,
+  so ``python_worker_s / python_tasks`` is the Python time per task.
 
 ``wall_s - stage_s - driver_s`` is job time outside any stage, plus the time
 of jobs that ran without the lane's description (``untagged_jobs``).
@@ -388,6 +390,8 @@ def layers(log: EventLog, name: str, windows: list[tuple[float, float]]) -> dict
     jobs = [j for j in log.jobs.values() if j["desc"] == desc]
     stages = log.stages_of(jobs)
     tasks = [t for st in stages for t in st["tasks"]]
+    python_stages = [st for st in stages
+                     if any(m == PY_TIME for m, _ in st.get("accums", {}).values())]
     in_jobs, untagged = 0.0, set()
     for start, end in windows:
         during = [(jid, j) for jid, j in log.jobs.items()
@@ -402,6 +406,7 @@ def layers(log: EventLog, name: str, windows: list[tuple[float, float]]) -> dict
         "jobs": len(jobs),
         "untagged_jobs": len(untagged),
         "python_worker_s": round(sum(log.node_metric(st, PY_TIME) for st in stages) / 1e3, 3),
+        "python_tasks": sum(len(st["tasks"]) for st in python_stages),
         "arrow_bytes_sent": int(sum(log.node_metric(st, PY_SENT) for st in stages)),
         "arrow_bytes_returned": int(sum(log.node_metric(st, PY_RETURNED) for st in stages)),
         "shuffle_bytes": sum(t["shuffle_write"] for t in tasks),
