@@ -1,9 +1,9 @@
 """The flagship extraction pipeline, end to end:
 
     read pages table → assign split buckets → resume-filter vs checkpoint
-    manifest → cache the remaining pages → per commit batch:
-    Arrow-vectorized extraction (mapInPandas) → write partitioned output →
-    mark splits complete → lineage counters.
+    manifest → cache the remaining pages and count them per split → per
+    commit batch: Arrow-vectorized extraction (mapInPandas) → write
+    partitioned output → mark splits complete → lineage counters.
 
 This is the Spark restatement of the reference's sequential per-book loop
 (/root/reference/src/ingest.py:283-296) — the loop becomes per-partition
@@ -27,7 +27,12 @@ Scale design (north_rule):
   splits and then commits them in batches, and all of those jobs read one
   cached copy of the split-tagged pages. The batch filter cannot be pushed
   into the source instead, because ``split_id`` is a hash of the url the
-  source only knows after parsing (a WARC file holds urls of every split).
+  source only knows after parsing (a WARC file holds urls of every split);
+- a commit batch runs only its extraction+write (under AQE, the shuffle
+  map stage and the write stage); no job follows it. The extracted rows
+  are never persisted or read twice: the split listing already counted
+  each split's rows (one output row per input row), and the driver writes
+  the batch's manifest rows from those counts without a job.
 """
 
 from __future__ import annotations
@@ -178,6 +183,13 @@ def run_pipeline(
     manifest and redoes only unmarked splits. ``fail_after_batches`` is a
     test hook that simulates a mid-job crash between commits.
 
+    A batch runs only its extraction+write, with no job after it. The
+    split-listing job counts the remaining rows per split; extraction emits
+    one row per input row, error rows included, so those counts are the
+    manifest's ``rows_out`` and ``mark_splits_complete`` writes them from
+    the driver. The write repartitions to min(splits in the batch,
+    ``defaultParallelism``) tasks, one file per split.
+
     The input is read once per job. The split-tagged, resume-filtered pages
     are persisted (MEMORY_AND_DISK); the split-listing job materializes them
     and every commit batch filters that copy. Without it each batch would
@@ -198,9 +210,13 @@ def run_pipeline(
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     done_splits: list[int] = []
     try:
-        remaining = sorted(
-            r["split_id"] for r in df.select("split_id").distinct().collect()
-        )
+        # one output row per input row (_extract_batches), so the listing's
+        # per-split counts are the rows each split writes
+        rows_in = {
+            r["split_id"]: r["count"]
+            for r in df.groupBy("split_id").count().collect()
+        }
+        remaining = sorted(rows_in)
         if not remaining:
             return {"run_id": run_id, "docs": 0, "errors": 0, "bytes_in": 0,
                     "html_docs": 0, "pdf_docs": 0, "splits_done": 0}
@@ -214,18 +230,11 @@ def run_pipeline(
             if fail_after_batches is not None and bi >= fail_after_batches:
                 break  # simulated crash: manifest only covers committed batches
             part = df.filter(F.col("split_id").isin(split_batch))
-            extracted = extract_splits(part, n_tasks)
-            # persist so the write and the manifest aggregates share ONE
-            # extraction pass — re-reading the output directory per batch
-            # costs a driver-side file listing that grows with
-            # files-per-batch (real at 10^5 output files), and re-aggregating
-            # the un-persisted plan would run the extraction twice
-            extracted = extracted.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                write_extracted(extracted, output_dir)  # dynamic overwrite by split
-                ckpt.mark_splits_complete(extracted, manifest_dir, run_id, n_splits)
-            finally:
-                extracted.unpersist()
+            # dynamic overwrite by split
+            write_extracted(extract_splits(part, n_tasks), output_dir, len(split_batch))
+            ckpt.mark_splits_complete(
+                {s: rows_in[s] for s in split_batch}, manifest_dir, run_id, n_splits
+            )
             done_splits.extend(split_batch)
     finally:
         df.unpersist()

@@ -15,10 +15,27 @@ bucketing rather than silently skipping the wrong url set.
 
 Write protocol (idempotence, SURVEY.md §7 hard-part 4): output is written
 partitioned-by-split with dynamic partition overwrite FIRST, the manifest
-row is appended AFTER — a crash between the two re-does a split (overwrite,
-harmless) but never skips an unwritten one. Rows carry a monotonic
-``commit_seq`` (driver wall-clock ns at mark time) so "latest wins" is
-well-defined across resumed runs.
+rows are appended AFTER — a crash between the two re-does a split
+(overwrite, harmless) but never skips an unwritten one. Rows carry a
+monotonic ``commit_seq`` (driver wall-clock ns at mark time) so "latest
+wins" is well-defined across resumed runs.
+
+The append is one parquet file that the driver writes, not a Spark job:
+the rows of a commit (a few per split) are known on the driver already, so
+a distributed write would only add a job. The file is written under a
+hidden name in the manifest directory and then ``os.replace``d to
+``part-<commit_seq>-<run_id>.parquet``, so readers see the whole file or
+none of it. The manifest directory must therefore be on a filesystem the
+driver reaches through ``os``, which this module already requires: the
+crash recovery of compaction (``_recover_manifest``, the renames in
+``compact_manifest``) and the emptiness check (``_walk_files``) use ``os``
+too.
+
+Hidden-path rule: like Spark's file listing, the readers here skip every
+file or directory whose name starts with ``_`` or ``.``. So a temporary
+file of an unfinished append, driver-written (``.part-*``) or left by a
+crashed Spark append (``_temporary/...``), never counts as a completed
+split, and a manifest that holds only such files reads as empty.
 """
 
 from __future__ import annotations
@@ -26,6 +43,8 @@ from __future__ import annotations
 import os
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 MANIFEST_SCHEMA = (
@@ -70,10 +89,16 @@ def read_completed_splits(
     return df.select("split_id").distinct()
 
 
+def _hidden(name: str) -> bool:
+    return name.startswith(("_", "."))
+
+
 def _walk_files(root: str):
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            yield f
+    """Names of the files under ``root`` that Spark's file listing reads:
+    the hidden-path rule (module docstring) prunes the rest."""
+    for _dirpath, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        yield from (f for f in files if not _hidden(f))
 
 
 def filter_resumable(
@@ -128,24 +153,41 @@ def compact_manifest(spark: SparkSession, manifest_dir: str) -> int:
     return n
 
 
+# MANIFEST_SCHEMA as the Arrow schema of the driver-written files
+_MANIFEST_ARROW = pa.schema([
+    ("split_id", pa.int32()),
+    ("status", pa.string()),
+    ("rows_out", pa.int64()),
+    ("run_id", pa.string()),
+    ("n_splits", pa.int32()),
+    ("commit_seq", pa.int64()),
+])
+
+
 def mark_splits_complete(
-    extracted: DataFrame,
+    rows_out: dict[int, int],
     manifest_dir: str,
     run_id: str,
     n_splits: int | None = None,
 ) -> None:
-    """Append one `complete` row per split actually written this run."""
-    (
-        extracted.groupBy("split_id")
-        .agg(F.count("*").alias("rows_out"))
-        .select(
-            "split_id",
-            F.lit("complete").alias("status"),
-            "rows_out",
-            F.lit(run_id).alias("run_id"),
-            F.lit(n_splits).cast("int").alias("n_splits"),
-            F.lit(time.time_ns()).alias("commit_seq"),
-        )
-        .write.mode("append")
-        .parquet(manifest_dir)
+    """Append one `complete` row per split written this run, with its
+    output row count (``rows_out``: split id → rows), as one atomic
+    driver-written file (module docstring). Starts no Spark job."""
+    os.makedirs(manifest_dir, exist_ok=True)
+    seq = time.time_ns()
+    splits = sorted(rows_out)
+    table = pa.table(
+        [
+            splits,
+            ["complete"] * len(splits),
+            [rows_out[s] for s in splits],
+            [run_id] * len(splits),
+            [n_splits] * len(splits),
+            [seq] * len(splits),
+        ],
+        schema=_MANIFEST_ARROW,
     )
+    name = f"part-{seq}-{run_id}.parquet"
+    tmp = os.path.join(manifest_dir, "." + name)
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(manifest_dir, name))

@@ -35,9 +35,11 @@ def read_extracted(spark: SparkSession, path_or_table: str) -> DataFrame:
 def write_extracted(
     df: DataFrame,
     path_or_table: str,
+    split_count: int,
     partition_col: str = "split_id",
 ) -> None:
-    """Commit one batch of extracted splits.
+    """Commit one batch of extracted splits; ``split_count`` is the number
+    of distinct ``partition_col`` values ``df`` holds.
 
     Invariant the checkpoint protocol depends on (module docstring):
     re-writing a split replaces EXACTLY that split — never the table.
@@ -52,10 +54,14 @@ def write_extracted(
     # EVERY split directory it touches — the r5 10M-doc pipeline smoke
     # measured 524,288 files for 256 splits (2048 tasks × 256 splits), the
     # classic small-files failure that kills a 10^12-row table. The hash
-    # repartition moves the (smaller, post-extraction) output once and
-    # yields ~one file per split; `spark.sql.shuffle.partitions` tasks
-    # each write the whole splits they own.
-    df = df.repartition(F.col(partition_col))
+    # repartition moves the (smaller, post-extraction) output once, and
+    # each task writes the whole splits it owns: one file per split.
+    # The partition count is given, not left to AQE: AQE would coalesce a
+    # by-column repartition of a small batch to ONE task, writing all of
+    # the batch's files on one core; a by-number repartition is never
+    # coalesced, so min(splits, cores) tasks share the write.
+    n = min(split_count, spark.sparkContext.defaultParallelism)
+    df = df.repartition(n, F.col(partition_col))
     if is_table_identifier(path_or_table):
         writer = df.writeTo(path_or_table).partitionedBy(F.col(partition_col))
         if _table_exists(spark, path_or_table):

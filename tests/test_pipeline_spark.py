@@ -2,6 +2,7 @@
 byte identity, lineage counters, golden parity of the Spark path vs the
 pure-Python extractor (same bytes through mapInPandas)."""
 
+import itertools
 import shutil
 
 import pytest
@@ -108,7 +109,7 @@ def test_run_pipeline_reads_input_once_and_uncaches(spark, pages, tmp_path, monk
     assert run_pipeline(spark, pages, out, mani, n_splits=8)["splits_done"] == 0
     assert _cache_is_empty(spark)
 
-    def broken_write(df, output_dir):
+    def broken_write(df, output_dir, split_count):
         raise RuntimeError("write failed")
 
     monkeypatch.setattr(pipeline, "write_extracted", broken_write)
@@ -226,29 +227,22 @@ def test_iceberg_sink_per_partition_replace_contract(spark, monkeypatch):
     )
 
     monkeypatch.setattr(sink, "_table_exists", lambda s, t: True)
-    sink.write_extracted(df, "cat.db.extracted")
+    sink.write_extracted(df, "cat.db.extracted", 1)
     assert calls == [("overwritePartitions", "cat.db.extracted")]
 
     calls.clear()
     monkeypatch.setattr(sink, "_table_exists", lambda s, t: False)
-    sink.write_extracted(df, "cat.db.extracted")
+    sink.write_extracted(df, "cat.db.extracted", 1)
     assert calls == [("create", "cat.db.extracted")]
 
 
 def test_resume_ignores_manifest_from_different_bucketing(spark, tmp_path):
     """Split 3 of 64 is not split 3 of 128: completed-split rows recorded
     under another n_splits must not suppress work in this run."""
-    from pyspark.sql import functions as F
-
     from pdf_parser_benchmark_spark.sources import checkpoint as ckpt
 
     mdir = str(tmp_path / "manifest")
-    fake = spark.createDataFrame([(3, 100)], "split_id int, rows_out long").select(
-        "split_id", F.lit("complete").alias("status"), "rows_out"
-    )
-    ckpt.mark_splits_complete(
-        fake.select("split_id", F.col("rows_out")), mdir, "runA", n_splits=64
-    )
+    ckpt.mark_splits_complete({3: 100}, mdir, "runA", n_splits=64)
     assert ckpt.read_completed_splits(spark, mdir, n_splits=64).count() == 1
     assert ckpt.read_completed_splits(spark, mdir, n_splits=128).count() == 0
     assert ckpt.read_completed_splits(spark, mdir, n_splits=None).count() == 1
@@ -262,10 +256,8 @@ def test_compaction_latest_wins_and_crash_recovery(spark, tmp_path):
     from pdf_parser_benchmark_spark.sources import checkpoint as ckpt
 
     mdir = str(tmp_path / "manifest")
-    one = spark.createDataFrame([(7,)], "split_id int")          # 1 row out
-    two = spark.createDataFrame([(7,), (7,), (7,)], "split_id int")  # 3 rows out
-    ckpt.mark_splits_complete(one, mdir, "older", n_splits=8)
-    ckpt.mark_splits_complete(two, mdir, "newer", n_splits=8)
+    ckpt.mark_splits_complete({7: 1}, mdir, "older", n_splits=8)
+    ckpt.mark_splits_complete({7: 3}, mdir, "newer", n_splits=8)
     n = ckpt.compact_manifest(spark, mdir)
     assert n == 1
     row = spark.read.parquet(mdir).collect()[0]
@@ -292,7 +284,7 @@ def test_write_extracted_no_small_files_blowup(spark, tmp_path):
         rows, "doc int, url string, split_id int"
     ).repartition(n_parts)  # many upstream tasks, each touching every split
     out = str(tmp_path / "sink_files")
-    write_extracted(df, out)
+    write_extracted(df, out, n_splits)
     parts = glob.glob(f"{out}/split_id=*/part-*")
     dirs = glob.glob(f"{out}/split_id=*")
     assert len(dirs) == n_splits
@@ -300,3 +292,153 @@ def test_write_extracted_no_small_files_blowup(spark, tmp_path):
     assert len(parts) <= n_splits + 2, f"{len(parts)} part files"
     got = spark.read.parquet(out).count()
     assert got == 400
+
+
+def _manifest_rows(tmp_path, name: str, split_id: int = 3):
+    """Write one `complete` manifest row for ``split_id`` (n_splits=8) as a
+    parquet file at ``name`` under a fresh manifest directory."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    mdir = tmp_path / "manifest"
+    path = mdir / name
+    path.parent.mkdir(parents=True)
+    pq.write_table(pa.table({
+        "split_id": pa.array([split_id], pa.int32()),
+        "status": ["complete"],
+        "rows_out": pa.array([1], pa.int64()),
+        "run_id": ["crashed"],
+        "n_splits": pa.array([8], pa.int32()),
+        "commit_seq": pa.array([1], pa.int64()),
+    }), str(path))
+    return str(mdir)
+
+
+@pytest.mark.parametrize("name", [
+    "_temporary/0/_temporary/attempt_0/part-00000.parquet",
+    ".part-00000.parquet",
+], ids=["crashed-spark-append", "hidden-file"])
+def test_manifest_files_spark_ignores_do_not_count(spark, pages, tmp_path, name):
+    """A manifest directory whose only parquet files are ones Spark's file
+    listing skips (names starting with '_' or '.', at any depth) holds no
+    completed split: the read returns no rows instead of failing to infer
+    a schema, and the next run redoes every split."""
+    from pdf_parser_benchmark_spark.sources.checkpoint import read_completed_splits
+
+    mani = _manifest_rows(tmp_path, name)
+    assert read_completed_splits(spark, mani, n_splits=8).count() == 0
+    r = run_pipeline(spark, pages, str(tmp_path / "out"), mani, n_splits=8)
+    assert r["splits_done"] == 8
+    assert read_completed_splits(spark, mani, n_splits=8).count() == 8
+
+
+def _last_job_result_tasks(sc, group: str) -> int:
+    """Task count of the result stage of the last job in ``group``."""
+    st = sc.statusTracker()
+    job = st.getJobInfo(max(st.getJobIdsForGroup(group)))
+    return st.getStageInfo(max(job.stageIds)).numTasks
+
+
+def test_commit_batch_write_uses_every_core_and_mark_starts_no_job(
+    spark, pages, tmp_path, monkeypatch
+):
+    """Each commit batch is one extraction+write job: marking the batch's
+    splits complete starts no Spark job, and the write's result stage runs
+    min(splits in the batch, defaultParallelism) tasks, not the one task
+    AQE coalesces a by-column repartition to."""
+    from pdf_parser_benchmark_spark.plans import pipeline
+    from pdf_parser_benchmark_spark.sources import checkpoint as ckpt
+
+    sc = spark.sparkContext
+    groups = {"write": [], "mark": []}
+    seq = itertools.count()
+
+    def in_group(kind, fn):
+        def run(*args, **kwargs):
+            group = f"{kind}-{tmp_path.name}-{next(seq)}"
+            groups[kind].append(group)
+            sc.setJobGroup(group, group)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+        return run
+
+    monkeypatch.setattr(pipeline, "write_extracted",
+                        in_group("write", pipeline.write_extracted))
+    monkeypatch.setattr(ckpt, "mark_splits_complete",
+                        in_group("mark", ckpt.mark_splits_complete))
+
+    # 120 urls fill every one of 8 and of 16 splits
+    for n_splits, commit_batches in ((8, 4), (16, 1)):
+        groups["write"].clear()
+        groups["mark"].clear()
+        r = run_pipeline(spark, pages, str(tmp_path / f"out{n_splits}"),
+                         str(tmp_path / f"mani{n_splits}"),
+                         n_splits=n_splits, commit_batches=commit_batches)
+        assert r["splits_done"] == n_splits
+        per_batch = n_splits // commit_batches
+        assert len(groups["write"]) == len(groups["mark"]) == commit_batches
+        for g in groups["mark"]:
+            assert sc.statusTracker().getJobIdsForGroup(g) == []
+        want = min(per_batch, sc.defaultParallelism)
+        assert [_last_job_result_tasks(sc, g) for g in groups["write"]] == (
+            [want] * commit_batches
+        )
+
+
+def test_manifest_rows_out_equals_output_rows(spark, pages, tmp_path):
+    """Every manifest row's rows_out is the number of output rows of its
+    split, after a clean run and after a crash plus resume; compaction
+    reads a manifest that mixes a Spark-written file with driver-written
+    ones."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from pdf_parser_benchmark_spark.sources.checkpoint import (
+        MANIFEST_SCHEMA,
+        compact_manifest,
+    )
+
+    def check(out, mani):
+        rows_out = {
+            r["split_id"]: r["rows_out"]
+            for r in spark.read.parquet(mani).select("split_id", "rows_out").collect()
+        }
+        written = {
+            r["split_id"]: r["count"]
+            for r in spark.read.parquet(out).groupBy("split_id").count().collect()
+        }
+        assert rows_out == written
+        assert sum(written.values()) == N_ROWS
+
+    out_a, mani_a = str(tmp_path / "outA"), str(tmp_path / "maniA")
+    run_pipeline(spark, pages, out_a, mani_a, n_splits=8, commit_batches=4)
+    assert spark.read.parquet(mani_a).count() == 8
+    assert spark.read.parquet(mani_a).schema == _parse_datatype_string(MANIFEST_SCHEMA)
+    check(out_a, mani_a)
+
+    out_b, mani_b = str(tmp_path / "outB"), str(tmp_path / "maniB")
+    r1 = run_pipeline(spark, pages, out_b, mani_b, n_splits=8,
+                      commit_batches=4, fail_after_batches=2)
+    assert 0 < r1["splits_done"] < 8
+    run_pipeline(spark, pages, out_b, mani_b, n_splits=8, commit_batches=4)
+    assert spark.read.parquet(mani_b).count() == 8
+    check(out_b, mani_b)
+
+    # an older Spark-written manifest file beside the driver-written ones
+    (
+        spark.range(8)
+        .select(
+            F.col("id").cast("int").alias("split_id"),
+            F.lit("complete").alias("status"),
+            F.lit(0).cast("bigint").alias("rows_out"),
+            F.lit("spark").alias("run_id"),
+            F.lit(8).cast("int").alias("n_splits"),
+            F.lit(1).cast("bigint").alias("commit_seq"),
+        )
+        .coalesce(1).write.mode("append").parquet(mani_b)
+    )
+    assert spark.read.parquet(mani_b).count() == 16
+    assert compact_manifest(spark, mani_b) == 8
+    check(out_b, mani_b)
