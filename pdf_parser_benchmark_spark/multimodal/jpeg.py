@@ -30,8 +30,10 @@ Decoder rejects lossless/hierarchical/arithmetic-coded streams with
 ValueError — poison-tolerant callers route that to `decode_error`.
 
 Everything is deterministic: fixed tables, fixed np.round (ties-to-even)
-quantization, float64 matrix IDCT — byte-stable across runs and platforms,
-pinned by sha256 digests in tests/test_multimodal.py.
+quantization, float64 matrix DCT/IDCT through `fixed_order_matmul` (never
+BLAS, whose kernel and so whose last bit depend on the CPU) — byte-stable
+across runs and platforms, pinned by sha256 digests in
+tests/test_multimodal.py.
 """
 
 from __future__ import annotations
@@ -40,6 +42,8 @@ import struct
 
 import numpy as np
 
+from ..fixed_order import fixed_order_matmul
+
 # --- 8x8 DCT-II orthonormal basis (float64, deterministic) -----------------
 
 _A = np.zeros((8, 8))
@@ -47,6 +51,23 @@ for _u in range(8):
     _c = (1 / np.sqrt(2)) if _u == 0 else 1.0
     for _x in range(8):
         _A[_u, _x] = 0.5 * _c * np.cos((2 * _x + 1) * _u * np.pi / 16)
+
+
+def _fdct(block: np.ndarray) -> np.ndarray:
+    """2-D DCT-II of each trailing 8x8 block, (_A · block) · _Aᵀ."""
+    return fixed_order_matmul(fixed_order_matmul(_A, block), _A.T)
+
+
+def _idct(coef: np.ndarray) -> np.ndarray:
+    """2-D inverse DCT of each trailing 8x8 block, (_Aᵀ · coef) · _A."""
+    return fixed_order_matmul(fixed_order_matmul(_A.T, coef), _A)
+
+
+def _block_grid(plane: np.ndarray) -> np.ndarray:
+    """(8·bh, 8·bw) plane → (bh, bw, 8, 8) view of its 8x8 blocks."""
+    h, w = plane.shape
+    return plane.reshape(h // 8, 8, w // 8, 8).swapaxes(1, 2)
+
 
 # zigzag order (spec Figure 5): index i walks the 8x8 block diagonally
 _ZIGZAG = np.array(
@@ -181,10 +202,9 @@ def _magnitude(v: int) -> tuple[int, int]:
     return t, bits
 
 
-def _encode_blocks(bw, blocks, qtab, dc_codes, ac_codes, pred):
-    """Encode one component's 8x8 block (already level-shifted): DCT,
-    quantize, zigzag, DC-diff + AC run-length Huffman."""
-    coef = _A @ blocks @ _A.T
+def _encode_blocks(bw, coef, qtab, dc_codes, ac_codes, pred):
+    """Encode one component's 8x8 block of DCT coefficients: quantize,
+    zigzag, DC-diff + AC run-length Huffman."""
     q = np.round(coef / qtab).astype(np.int32)
     zz = q.reshape(64)[_ZIGZAG]
     diff = int(zz[0]) - pred
@@ -316,6 +336,7 @@ def jpeg_encode(
     dc_codes = [_canonical_codes(*_DC_LUM)] + [_canonical_codes(*_DC_CHR)] * 2
     ac_codes = [_canonical_codes(*_AC_LUM)] + [_canonical_codes(*_AC_CHR)] * 2
     qtabs = [ql] + [qc] * 2
+    coefs = [_fdct(_block_grid(p)) for p in padded]
     bw = _BitWriter()
     preds = [0] * ncomp
     rst = 0
@@ -331,11 +352,9 @@ def jpeg_encode(
                 sh, sv = sampling[ci]
                 for by in range(sv):
                     for bx in range(sh):
-                        y0 = (my * sv + by) * 8
-                        x0 = (mx * sh + bx) * 8
-                        block = padded[ci][y0 : y0 + 8, x0 : x0 + 8]
+                        coef = coefs[ci][my * sv + by, mx * sh + bx]
                         preds[ci] = _encode_blocks(
-                            bw, block, qtabs[ci], dc_codes[ci], ac_codes[ci],
+                            bw, coef, qtabs[ci], dc_codes[ci], ac_codes[ci],
                             preds[ci],
                         )
             mcu_count += 1
@@ -583,7 +602,7 @@ def _decode_scan(d, pos, frame, scan, qt, huff, restart):
                         coef = (zz[_UNZIGZAG].reshape(8, 8) * qt[tq]).astype(
                             np.float64
                         )
-                        block = _A.T @ coef @ _A + 128.0
+                        block = _idct(coef) + 128.0
                         y0 = (my * sv + by) * 8
                         x0 = (mx * sh + bx) * 8
                         planes[cs][y0 : y0 + 8, x0 : x0 + 8] = block
@@ -824,16 +843,9 @@ def _prog_reconstruct(frame, prog, qt):
     for cid, sh, sv, tq in comps:
         carr = prog["coef"][cid]
         bh_pad, bw_pad = carr.shape[0], carr.shape[1]
-        plane = np.zeros((bh_pad * 8, bw_pad * 8))
-        q = qt[tq]
-        for by in range(bh_pad):
-            for bx in range(bw_pad):
-                zz = carr[by, bx]
-                c = (zz[_UNZIGZAG].reshape(8, 8) * q).astype(np.float64)
-                plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                    _A.T @ c @ _A + 128.0
-                )
-        planes[cid] = plane
+        c = carr[..., _UNZIGZAG].reshape(bh_pad, bw_pad, 8, 8) * qt[tq]
+        blocks = _idct(c.astype(np.float64)) + 128.0
+        planes[cid] = blocks.swapaxes(1, 2).reshape(bh_pad * 8, bw_pad * 8)
     return _assemble_planes(frame, planes, prog["hmax"], prog["vmax"])
 
 
@@ -895,13 +907,8 @@ def _quantized_blocks(comps, ql, qc, w, h):
         pad = np.pad(
             plane, ((0, bh * 8 - h), (0, bwid * 8 - w)), mode="edge"
         ) - 128.0
-        arr = np.zeros((bh, bwid, 64), dtype=np.int32)
-        for by in range(bh):
-            for bx in range(bwid):
-                block = pad[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-                zz = np.round((_A @ block @ _A.T) / q).astype(np.int32)
-                arr[by, bx] = zz.reshape(64)[_ZIGZAG]
-        out.append(arr)
+        zz = np.round(_fdct(_block_grid(pad)) / q).astype(np.int32)
+        out.append(zz.reshape(bh, bwid, 64)[..., _ZIGZAG])
     return out
 
 

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ..fixed_order import fixed_order_matmul
 from ..functions.similarity import cosine_rounded
 
 
@@ -839,6 +840,58 @@ def pq_topk_lut(
                          corpus_id, corpus_vec)
 
 
+_NS_STEPS = 50  # σ/‖M‖_F ≳ 1e-8 reaches 1; σ/‖M‖_F ≲ 1e-15 stays < 1e-6
+
+
+def _partial_isometry(M):
+    """U₊V₊ᵀ over M's well-conditioned singular directions, without
+    LAPACK: `_NS_STEPS` Newton–Schulz steps Y ← ½·Y·(3I − YᵀY) from
+    Y₀ = M/‖M‖_F (singular values in (0, 1]; each step maps σ → σ(3 − σ²)/2
+    and keeps the singular vectors). Directions where M is zero up to
+    rounding stay near 0; the closing Y·YᵀY cubes them away."""
+    import numpy as np
+
+    Y = M / np.sqrt(np.sum(M * M))
+    three_i = 3.0 * np.eye(len(M))
+    for _ in range(_NS_STEPS):
+        Y = 0.5 * fixed_order_matmul(Y, three_i - fixed_order_matmul(Y.T, Y))
+    return fixed_order_matmul(Y, fixed_order_matmul(Y.T, Y))
+
+
+def _procrustes(M, R_prev):
+    """The orthogonal R maximizing tr(RᵀM) (orthogonal Procrustes): the
+    polar factor UVᵀ of M = UΣVᵀ, from fixed-order products only.
+
+    When M is rank-deficient the maximizer is not unique: any R = U₊V₊ᵀ +
+    U₀QV₀ᵀ with Q orthogonal on M's null directions ties. OPQ hits this by
+    construction whenever codes ≤ dim/m (each subspace's centroids then
+    reproduce a constant column, so the reconstruction X̂ loses m − 1
+    ranks), and SVD's choice of Q there is whatever its kernel's rounding
+    gives. Here the tie goes to the maximizer nearest R_prev (the previous
+    rotation): Q is the polar factor of U₀ᵀ·R_prev·V₀, computed as that of
+    (I − U₊U₊ᵀ)·R_prev·(I − V₊V₊ᵀ). Raises ValueError when no orthogonal R
+    comes out: M ill-conditioned between those regimes, or R_prev
+    degenerate on the null directions."""
+    import numpy as np
+
+    eye = np.eye(len(M))
+    R = _partial_isometry(M)
+    P_v = fixed_order_matmul(R.T, R)
+    if len(M) - np.trace(P_v) > 0.5:  # M has null directions
+        P_u = fixed_order_matmul(R, R.T)
+        R = R + _partial_isometry(
+            fixed_order_matmul(fixed_order_matmul(eye - P_u, R_prev), eye - P_v)
+        )
+    err = np.abs(fixed_order_matmul(R.T, R) - eye).max()
+    if not err <= 1e-9:  # NaN too (an all-zero M)
+        raise ValueError(
+            "OPQ Procrustes step found no orthogonal rotation: XᵀX̂ is too "
+            f"ill-conditioned (max |RᵀR − I| = {err:.3g} after "
+            f"{_NS_STEPS} Newton–Schulz steps)"
+        )
+    return R
+
+
 def opq_rotation(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -859,18 +912,26 @@ def opq_rotation(
     any corpus scale; sample_n·dim floats ≈ a few MB):
       repeat: PQ-fit the rotated sample (numpy Lloyd's, same
       lowest-id-init/first-occurrence-argmin discipline as kmeans_fit) →
-      reconstruct X̂ from codes → R ← UVᵀ from SVD(X̂ᵀX) (orthogonal
-      Procrustes). Deterministic: fixed sample, fixed iteration counts,
-      LAPACK SVD (stable in-container, where the pinned oracles are
-      generated).
+      reconstruct X̂ from codes → R ← UVᵀ, the polar factor of XᵀX̂
+      (orthogonal Procrustes, `_procrustes`).
+    Deterministic: fixed sample, fixed iteration counts, and every product
+    is `fixed_order_matmul` — no BLAS or LAPACK call, whose kernel (and so
+    whose last bit, and so the PQ argmins that follow) depends on the CPU.
 
     Returns R as a (dim, dim) float32 numpy array (broadcast by value in
-    closures downstream)."""
+    closures downstream). Raises ValueError on a sample of fewer than dim
+    vectors (it leaves directions no data constrains) and when a
+    Procrustes step finds no orthogonal R (`_procrustes`)."""
     import numpy as np
 
     sub = dim // m
     rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_n).collect()
     X = np.array([list(r[vec_col]) for r in rows], dtype=np.float64)  # (n, dim)
+    if len(X) < dim:
+        raise ValueError(
+            f"OPQ needs a sample of at least dim={dim} vectors to determine "
+            f"a rotation; the corpus gave {len(X)}"
+        )
     R = np.eye(dim)
 
     def _pq_sample_fit(Z):
@@ -890,19 +951,18 @@ def opq_rotation(
         return recon
 
     for _ in range(opq_iterations):
-        Z = X @ R
-        recon = _pq_sample_fit(Z)
-        U, _sv, Vt = np.linalg.svd(X.T @ recon)
-        R = U @ Vt
+        recon = _pq_sample_fit(fixed_order_matmul(X, R))
+        R = _procrustes(fixed_order_matmul(X.T, recon), R)
     return R.astype(np.float32)
 
 
 def rotate_vectors(
     df: DataFrame, R, vec_col: str = "embedding", out_col: str | None = None
 ) -> DataFrame:
-    """x → R·x per row (numpy mapInPandas over Arrow batches; R ships in
-    the closure — dim² floats). float32 in/out, matching the embedding
-    column type."""
+    """x → x·R per row vector, as the OPQ fit rotates its sample (numpy
+    mapInPandas over Arrow batches; R ships in the closure — dim² floats).
+    float32 in/out, matching the embedding column type; the product is
+    `fixed_order_matmul`, so the rotated bits do not depend on the CPU."""
     import numpy as np
 
     out_col = out_col or vec_col
@@ -922,7 +982,7 @@ def rotate_vectors(
             if not len(b):
                 continue
             vecs = _np.stack(b[vec_col].to_numpy()).astype(_np.float32)
-            rot = vecs @ R32
+            rot = fixed_order_matmul(vecs, R32)
             data = {c: b[c] for c in others}
             data[out_col] = list(rot)
             yield _pd.DataFrame(data)

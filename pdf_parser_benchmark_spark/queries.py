@@ -951,7 +951,7 @@ def q_pq_topk_lut(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query("opq_topk")  # iterative fit + SVD rotation — pinned oracle
+@query("opq_topk")  # iterative fit + Procrustes rotation — pinned oracle
 def q_opq_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Optimized Product Quantization (Ge et al. 2013): an orthogonal
     rotation learned by alternating Procrustes/PQ on a bounded driver-side

@@ -575,6 +575,56 @@ def test_opq_rotation_is_orthogonal_and_reduces_quantization_error(spark):
     assert pq_mse(Xf @ R.astype(np.float64)) <= pq_mse(Xf) * 1.001
 
 
+def test_procrustes_matches_svd_and_breaks_ties_toward_previous_rotation():
+    """`_procrustes` (Newton–Schulz on fixed-order products, no LAPACK)
+    returns the SVD polar factor UVᵀ of a full-rank M. On a rank-deficient
+    M it returns the tr(RᵀM)-maximizer nearest the previous rotation:
+    U₊V₊ᵀ + U₀·polar(U₀ᵀ·R_prev·V₀)·V₀ᵀ. An M too ill-conditioned for
+    either is refused, never returned as a non-orthogonal R."""
+    import numpy as np
+
+    from pdf_parser_benchmark_spark.operators.knn import _procrustes
+
+    def polar(A):
+        u, _, vt = np.linalg.svd(A)
+        return u @ vt
+
+    rng = np.random.default_rng(3)
+    dim = 12
+    U, V = polar(rng.standard_normal((dim, dim))), polar(rng.standard_normal((dim, dim)))
+    R_prev = polar(rng.standard_normal((dim, dim)))
+    sv = rng.uniform(0.5, 2.0, dim)
+
+    M = U @ np.diag(sv) @ V.T
+    assert np.abs(_procrustes(M, R_prev) - U @ V.T).max() < 1e-13
+
+    sv[-3:] = 0.0  # three null directions, as OPQ with codes == dim/m, m=4
+    M = U @ np.diag(sv) @ V.T
+    R = _procrustes(M, R_prev)
+    r = dim - 3
+    expect = U[:, :r] @ V[:, :r].T + U[:, r:] @ polar(
+        U[:, r:].T @ R_prev @ V[:, r:]
+    ) @ V[:, r:].T
+    assert np.abs(R.T @ R - np.eye(dim)).max() < 1e-13
+    assert abs(np.trace(R.T @ M) - sv.sum()) < 1e-12
+    assert np.abs(R - expect).max() < 1e-12
+
+    sv[-3:] = 1e-11  # neither converged nor null after the fixed steps
+    with pytest.raises(ValueError, match="ill-conditioned"):
+        _procrustes(U @ np.diag(sv) @ V.T, R_prev)
+
+
+def test_opq_rotation_refuses_sample_smaller_than_dim(spark):
+    from pdf_parser_benchmark_spark.operators.knn import opq_rotation
+
+    df = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) for j in range(16)]) for i in range(10)],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="at least dim=16 vectors"):
+        opq_rotation(df, m=4, dim=16, codes=4)
+
+
 def test_opq_topk_cluster_precision_and_schema(spark):
     """opq_topk end-to-end on clustered data: same cluster-retrieval
     contract as pq_topk, exact-rerank schema (qid, vec_id, score, rank)."""

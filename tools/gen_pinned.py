@@ -19,6 +19,16 @@ These pins are expected-output fixtures in the same spirit as the golden
 extraction fixtures: they change ONLY on an intentional semantic change,
 in which case re-run  python tools/gen_pinned.py  and commit the diff.
 
+A pin holds only if its query is a function of its input alone. So a
+pinned query must never round, threshold or argmin a value that came out
+of a BLAS or LAPACK call (numpy `@`, `np.dot`, `np.linalg.*`): numpy's
+OpenBLAS picks its kernel by CPU, and the kernels differ in the last bit.
+Use `fixed_order.fixed_order_matmul` for such products;
+tests/test_blas_kernel_sweep.py runs the JPEG codec and the OPQ fit under
+every OpenBLAS core type the CPU supports and requires identical bytes.
+Running this script under two `OPENBLAS_CORETYPE` values must write the
+same file.
+
 Output: pdf_parser_benchmark_spark/pinned_oracles.py (generated, committed).
 """
 
