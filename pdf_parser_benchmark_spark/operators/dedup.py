@@ -393,7 +393,6 @@ def minhash_signature_from_shingles(
     docs: DataFrame,
     k: int = 16,
     hash_fn: str = "md5",
-    dedup_shingles: bool = False,
 ) -> DataFrame:
     """(id, sh array) → (id, sig array<bigint> of length k):
     sig[i] = min over shingles of (a_i·base(sh) + b_i) mod p.
@@ -403,35 +402,8 @@ def minhash_signature_from_shingles(
     the aggregate lambda merges the k affine variants with a zip_with/least
     accumulator. No explode, no groupBy: the stage is embarrassingly
     parallel per document, which is exactly what you want in front of the
-    banded self-join at corpus scale.
-
-    dedup_shingles=True instead hashes each DISTINCT shingle once via
-    explode+join — a win only when the shingle vocabulary is much smaller
-    than the total shingle count (template-heavy corpora); it costs two
-    shuffles, so the default in-row fold is preferred otherwise."""
+    banded self-join at corpus scale."""
     params = minhash_affine_params(k)
-    if dedup_shingles:
-        sh = docs.select("id", F.explode("sh").alias("s"))
-        hashed = (
-            sh.select("s")
-            .distinct()
-            .withColumn("xm", _base_hash(F.col("s"), hash_fn))
-            .select(
-                "s",
-                *[
-                    ((F.lit(a) * F.col("xm") + F.lit(b)) % F.lit(MINHASH_P)).alias(
-                        f"hh{i}"
-                    )
-                    for i, (a, b) in enumerate(params)
-                ],
-            )
-        )
-        joined = sh.join(hashed, "s")
-        aggs = [F.min(F.col(f"hh{i}")).alias(f"h{i}") for i in range(k)]
-        sig = joined.groupBy("id").agg(*aggs)
-        return sig.select(
-            "id", F.array(*[F.col(f"h{i}") for i in range(k)]).alias("sig")
-        )
     init = F.array(*[F.lit(MINHASH_P).cast("bigint") for _ in range(k)])
     sig_expr = F.aggregate(
         F.transform(F.col("sh"), lambda s: _base_hash(s, hash_fn)),
@@ -454,15 +426,11 @@ def minhash_signature(
     k: int = 16,
     shingle_k: int = 3,
     hash_fn: str = "md5",
-    dedup_shingles: bool = False,
 ) -> DataFrame:
     """→ (id, sig array<bigint>): shingle then sign (see
     minhash_signature_from_shingles)."""
     return minhash_signature_from_shingles(
-        shingled(df, id_col, text_col, shingle_k),
-        k=k,
-        hash_fn=hash_fn,
-        dedup_shingles=dedup_shingles,
+        shingled(df, id_col, text_col, shingle_k), k=k, hash_fn=hash_fn
     )
 
 
@@ -513,7 +481,6 @@ def minhash_dedup_pairs(
     k: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
-    dedup_shingles: bool = False,
     hash_fn: str = "md5",
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates → exact Jaccard verify ≥ t.
@@ -525,9 +492,7 @@ def minhash_dedup_pairs(
     than the corpus and this is the difference between a bounded verify join
     and re-shuffling every document body."""
     docs = shingled(df, id_col, text_col, shingle_k)
-    sig = minhash_signature_from_shingles(
-        docs, k=k, hash_fn=hash_fn, dedup_shingles=dedup_shingles
-    )
+    sig = minhash_signature_from_shingles(docs, k=k, hash_fn=hash_fn)
     # candidate pairs are re-read three times below (join left side + both
     # id projections) — persist so LSH runs once, not per branch; the frame
     # is (id, id) pairs, orders of magnitude smaller than the corpus

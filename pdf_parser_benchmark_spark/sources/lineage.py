@@ -5,40 +5,50 @@ Reference analogs: the rename audit CSV (K4,
 summary (A2, /root/reference/src/ingest.py:220-252). Ours is computed as a
 plain aggregation over the extracted output — map-side partial aggregation
 means this costs one cheap shuffle of pre-aggregated rows.
+
+The counters are defined once, in ``_counters``. ``lineage_counters``
+groups them by split over a written table; ``summary_metrics`` gives the
+job-level subset that ``run_pipeline`` observes on each commit batch's
+write, so the run summary costs no job of its own and cannot drift from
+the lineage table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-LINEAGE_COLS = (
-    "split_id",
-    "docs_out",
-    "docs_err",
-    "html_docs",
-    "pdf_docs",
-    "bytes_in",
-    "chars_out",
-)
+# run summary key → the lineage column it totals
+SUMMARY_COUNTERS = {
+    "docs": "docs_out",
+    "errors": "docs_err",
+    "bytes_in": "bytes_in",
+    "html_docs": "html_docs",
+    "pdf_docs": "pdf_docs",
+}
+
+
+def _counters() -> dict[str, Column]:
+    """Lineage column → its aggregate over extracted rows."""
+    return {
+        "docs_out": F.count(F.lit(1)),
+        "docs_err": F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)),
+        "html_docs": F.sum(F.when(F.col("parser") == "html", 1).otherwise(0)),
+        "pdf_docs": F.sum(F.when(F.col("parser") == "pdf", 1).otherwise(0)),
+        "bytes_in": F.sum("n_bytes_in"),
+        "chars_out": F.sum(F.length("text")),
+    }
+
+
+def summary_metrics() -> list[Column]:
+    """The run summary's aggregates, named by their summary keys."""
+    agg = _counters()
+    return [agg[col].alias(key) for key, col in SUMMARY_COUNTERS.items()]
 
 
 def lineage_counters(extracted: DataFrame) -> DataFrame:
     """Counters per split: docs in/out/err, per-parser counts, byte volumes."""
     return (
         extracted.groupBy("split_id")
-        .agg(
-            F.count("*").alias("docs_out"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias(
-                "docs_err"
-            ),
-            F.sum(F.when(F.col("parser") == "html", 1).otherwise(0)).alias(
-                "html_docs"
-            ),
-            F.sum(F.when(F.col("parser") == "pdf", 1).otherwise(0)).alias(
-                "pdf_docs"
-            ),
-            F.sum("n_bytes_in").alias("bytes_in"),
-            F.sum(F.length("text")).alias("chars_out"),
-        )
+        .agg(*[agg.alias(col) for col, agg in _counters().items()])
         .orderBy("split_id")
     )

@@ -10,7 +10,9 @@ needs: re-writing a split replaces exactly that split.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from typing import Sequence
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 
 def is_table_identifier(path_or_table: str) -> bool:
@@ -37,9 +39,15 @@ def write_extracted(
     path_or_table: str,
     split_count: int,
     partition_col: str = "split_id",
-) -> None:
+    metrics: Sequence[Column] = (),
+) -> Observation | None:
     """Commit one batch of extracted splits; ``split_count`` is the number
     of distinct ``partition_col`` values ``df`` holds.
+
+    ``metrics`` (named aggregates) are observed on the rows the write
+    commits and returned as an ``Observation``; ``None`` without metrics.
+    Its ``get`` blocks until the write's action has finished, so call it
+    only after a write that ran one.
 
     Invariant the checkpoint protocol depends on (module docstring):
     re-writing a split replaces EXACTLY that split — never the table.
@@ -62,16 +70,25 @@ def write_extracted(
     # coalesced, so min(splits, cores) tasks share the write.
     n = min(split_count, spark.sparkContext.defaultParallelism)
     df = df.repartition(n, F.col(partition_col))
+    # Observed above the exchange, so the metrics come from the write's
+    # result stage: the scheduler merges a result task's accumulators once
+    # per partition, a shuffle-map task's on every successful attempt, so
+    # a recomputed map stage would count its rows twice.
+    observation = None
+    if metrics:
+        observation = Observation()
+        df = df.observe(observation, *metrics)
     if is_table_identifier(path_or_table):
         writer = df.writeTo(path_or_table).partitionedBy(F.col(partition_col))
         if _table_exists(spark, path_or_table):
             writer.overwritePartitions()
         else:
             writer.create()
-        return
+        return observation
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         df.write.mode("overwrite")
         .partitionBy(partition_col)
         .parquet(path_or_table)
     )
+    return observation

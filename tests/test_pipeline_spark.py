@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf_parser_benchmark_spark.plans.pipeline import extract_pages, run_pipeline
-from pdf_parser_benchmark_spark.sources.lineage import lineage_counters
+from pdf_parser_benchmark_spark.sources.lineage import SUMMARY_COUNTERS, lineage_counters
+from pdf_parser_benchmark_spark.sources.sink import read_extracted
 from pdf_parser_benchmark_spark.synth.pages import generate_pages_df
 
 N_ROWS = 120
@@ -109,7 +110,7 @@ def test_run_pipeline_reads_input_once_and_uncaches(spark, pages, tmp_path, monk
     assert run_pipeline(spark, pages, out, mani, n_splits=8)["splits_done"] == 0
     assert _cache_is_empty(spark)
 
-    def broken_write(df, output_dir, split_count):
+    def broken_write(df, output_dir, split_count, metrics=()):
         raise RuntimeError("write failed")
 
     monkeypatch.setattr(pipeline, "write_extracted", broken_write)
@@ -442,3 +443,118 @@ def test_manifest_rows_out_equals_output_rows(spark, pages, tmp_path):
     assert spark.read.parquet(mani_b).count() == 16
     assert compact_manifest(spark, mani_b) == 8
     check(out_b, mani_b)
+
+
+@pytest.fixture(scope="module")
+def poisoned(spark, pages):
+    """The test pages plus one PDF the parser rejects: an error row."""
+    import pandas as pd
+
+    bad = spark.createDataFrame(pd.DataFrame([{
+        "url": "https://h.example/poison.pdf",
+        "warc_ts": pd.Timestamp("2026-01-01"),
+        "html": b"%PDF-1.4 garbage without structure",
+        "text": None,
+        "lang": "en",
+    }]), schema=pages.schema)
+    return pages.unionByName(bad)
+
+
+def test_summary_equals_lineage_totals_of_its_splits(spark, poisoned, tmp_path):
+    """run_pipeline's summary comes from its batch writes, not a read-back;
+    it equals the lineage counters of the output over exactly the splits
+    the run committed: a clean run, a crash after two batches (only the
+    committed batches count) and its resume."""
+
+    def check(summary, out, splits):
+        assert set(summary) == {"run_id", *SUMMARY_COUNTERS, "splits_done"}
+        assert summary["splits_done"] == len(splits)
+        lineage = lineage_counters(
+            read_extracted(spark, out).filter(F.col("split_id").isin(list(splits)))
+        ).collect()
+        assert {key: summary[key] for key in SUMMARY_COUNTERS} == {
+            key: sum(r[col] for r in lineage) for key, col in SUMMARY_COUNTERS.items()
+        }
+
+    out_a, mani_a = str(tmp_path / "outA"), str(tmp_path / "maniA")
+    clean = run_pipeline(spark, poisoned, out_a, mani_a, n_splits=8, commit_batches=4)
+    assert clean["docs"] == N_ROWS + 1 and clean["errors"] == 1
+    check(clean, out_a, range(8))
+
+    out_b, mani_b = str(tmp_path / "outB"), str(tmp_path / "maniB")
+    crashed = run_pipeline(spark, poisoned, out_b, mani_b, n_splits=8,
+                           commit_batches=4, fail_after_batches=2)
+    first = {r["split_id"] for r in
+             read_extracted(spark, out_b).select("split_id").distinct().collect()}
+    assert 0 < len(first) < 8
+    check(crashed, out_b, first)
+    resumed = run_pipeline(spark, poisoned, out_b, mani_b, n_splits=8, commit_batches=4)
+    check(resumed, out_b, set(range(8)) - first)
+    for key in SUMMARY_COUNTERS:
+        assert crashed[key] + resumed[key] == clean[key]
+
+
+def test_no_job_starts_after_a_batch_write(spark, pages, tmp_path, monkeypatch):
+    """The run summary is observed on the batch writes: once a write job
+    has returned, run_pipeline starts no Spark job, neither between batches
+    nor after the last one (the output is never read back)."""
+    from pdf_parser_benchmark_spark.plans import pipeline
+
+    sc = spark.sparkContext
+    writes, tails = [], []
+    write_extracted = pipeline.write_extracted
+
+    def write(*args, **kwargs):
+        group = f"write-{tmp_path.name}-{len(writes)}"
+        writes.append(group)
+        sc.setJobGroup(group, group)
+        try:
+            return write_extracted(*args, **kwargs)
+        finally:
+            sc.setJobGroup(tails[-1], tails[-1])
+
+    monkeypatch.setattr(pipeline, "write_extracted", write)
+    # clean; crash after two batches, then resume; full re-run in one batch
+    runs = (("A", {"commit_batches": 4}),
+            ("B", {"commit_batches": 4, "fail_after_batches": 2}),
+            ("B", {"commit_batches": 4}),
+            ("A", {"commit_batches": 1, "resume": False}))
+    for i, (name, kwargs) in enumerate(runs):
+        tails.append(f"after-write-{tmp_path.name}-{i}")
+        try:
+            run_pipeline(spark, pages, str(tmp_path / f"out{name}"),
+                         str(tmp_path / f"mani{name}"), n_splits=8, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    assert len(writes) == 4 + 2 + 4 + 1  # the resume commits 4 splits one by one
+    assert all(st.getJobIdsForGroup(g) for g in writes)
+    assert [st.getJobIdsForGroup(g) for g in tails] == [[]] * len(runs)
+
+
+def test_summary_observed_above_the_write_exchange(spark, pages, tmp_path):
+    """In each commit batch's write plan the summary's CollectMetrics node
+    sits above the repartition Exchange, in the write's result stage: a
+    result task's metrics merge once per partition, a recomputed shuffle
+    map stage's would count its rows twice."""
+    out = str(tmp_path / "out")
+    run_pipeline(spark, pages, out, str(tmp_path / "mani"), n_splits=8, commit_batches=2)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in range(executions.size() - 1, max(-1, executions.size() - 20), -1):
+        plan = executions.apply(i).physicalPlanDescription()
+        if f"file:{out}," in plan and "InsertIntoHadoopFsRelationCommand" in plan:
+            plans.append(plan)
+    assert len(plans) == 2
+    for plan in plans:
+        final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+        lines = final.splitlines()
+        observe = [i for i, line in enumerate(lines) if "CollectMetrics" in line]
+        exchange = [i for i, line in enumerate(lines) if "Exchange" in line]
+        assert len(observe) == 1 and exchange
+        assert observe[0] < exchange[0]
+        indent = [len(lines[i]) - len(lines[i].lstrip(" +-")) for i in (observe[0], exchange[0])]
+        assert indent[0] < indent[1]
