@@ -42,8 +42,6 @@ TAG_MAP: tuple[tuple[str, str], ...] = (
     ("table_row", "table"),
 )
 
-REPRO_RE = re.compile(r"[Rr]eproducible\s+([\d]+\.[\d]+|[\d]+[A-Za-z]?)")
-
 BOILER_FRACTION = 0.4  # strictly greater-than
 BOILER_MAX_LEN = 100  # strictly less-than
 
@@ -59,11 +57,6 @@ def infer_chunk_type(tag: str) -> str:
         if key in tag_lower:
             return val
     return "body_text"
-
-
-def extract_reproducible_id(text: str) -> str | None:
-    m = REPRO_RE.search(text)
-    return m.group(1) if m else None
 
 
 @dataclass

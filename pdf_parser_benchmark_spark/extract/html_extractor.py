@@ -517,49 +517,39 @@ def _drive_fast(html: str, p: "_BlockParser") -> None:
     p._flush()
 
 
-def extract_media_refs(html: str) -> list[tuple[str, str]]:
-    """(kind, url) media references in document order: img/video/audio src
-    plus every srcset candidate (img and <picture><source>). Fast tokenizer
-    with stdlib fallback, same as the block path."""
+def _tokenized(html: str) -> "_BlockParser":
+    """The block state machine driven over ``html``: by the fast tokenizer,
+    or, on any exception, afresh by stdlib html.parser."""
     try:
         p = _BlockParser()
         _drive_fast(html, p)
-        return p.media
     except Exception:
         p = _BlockParser()
         p.feed(html)
         p.close()
-        return p.media
+        p._flush()
+    return p
+
+
+def extract_media_refs(html: str) -> list[tuple[str, str]]:
+    """(kind, url) media references in document order: img/video/audio src
+    plus every srcset candidate (img and <picture><source>)."""
+    return _tokenized(html).media
 
 
 def extract_links(html: str) -> list[tuple[str, str]]:
     """(href, whitespace-normalized anchor text) in document order — the
     link-graph mining step (anchor text is a classic relevance/quality
     signal; hrefs feed host-level graph statistics). Nested <a> keeps the
-    outermost href. Fast tokenizer with stdlib fallback."""
-    try:
-        p = _BlockParser()
-        _drive_fast(html, p)
-        return p.links
-    except Exception:
-        p = _BlockParser()
-        p.feed(html)
-        p.close()
-        return p.links
+    outermost href."""
+    return _tokenized(html).links
 
 
 def robots_noindex(html: str) -> bool:
     """True when any <meta name=robots> directive contains a `noindex`
     token (comma/space separated, case-insensitive) — the standard
     crawl-pipeline exclusion check."""
-    try:
-        p = _BlockParser()
-        _drive_fast(html, p)
-    except Exception:
-        p = _BlockParser()
-        p.feed(html)
-        p.close()
-    for content in p.meta_robots:
+    for content in _tokenized(html).meta_robots:
         toks = {t.strip().lower() for t in content.replace(",", " ").split()}
         if "noindex" in toks:
             return True
@@ -571,10 +561,7 @@ def parse_html_blocks(html: str) -> list[HtmlBlock]:
 
     Fast regex scanner by default (same state machine as the stdlib path);
     stdlib html.parser as the safety net on any exception."""
-    try:
-        return parse_html_blocks_fast(html)
-    except Exception:
-        return parse_html_blocks_stdlib(html)
+    return _tokenized(html).blocks
 
 
 def is_boilerplate(b: HtmlBlock) -> bool:

@@ -112,16 +112,9 @@ def _select_rules(groups: list[RobotsGroup], agent: str) -> list | None:
     return merged if matched else None
 
 
-_SITEMAP_DIRECTIVE_RE = re.compile(r"(?im)^\s*sitemap\s*:\s*(\S+)")
 # XML sitemap protocol (sitemaps.org, public): <urlset><url><loc>…
 _LOC_RE = re.compile(r"<loc>\s*([^<\s][^<]*?)\s*</loc>")
 _XML_ENT = {"&amp;": "&", "&lt;": "<", "&gt;": ">", "&quot;": '"', "&apos;": "'"}
-
-
-def sitemap_urls_from_robots(text: str) -> list[str]:
-    """Sitemap: directives from robots.txt (RFC 9309 allows them anywhere,
-    outside any group), in file order."""
-    return [m.group(1) for m in _SITEMAP_DIRECTIVE_RE.finditer(text)]
 
 
 def parse_sitemap(xml: str) -> tuple[list[str], list[str]]:

@@ -7,10 +7,11 @@ plumbing (schemas, batch iteration, partitioning) is real and tested.
 
 Codecs: PNG and binary PNM images plus WAV/PCM audio are decoded by
 FROM-SCRATCH stdlib+numpy decoders (public specs: RFC 2083, RIFF/WAVE) —
-real, deterministic, and tested in-container. Other formats (JPEG/WebP,
-MP3/OGG) route to PIL when importable (skip-if-absent test) and otherwise
-land in the poison-tolerant `decode_error` column. `deterministic_fake=True`
-remains for the exact-SQL-twin oracle path (sha256-derived features).
+real, deterministic, and tested in-container. Other image formats
+(JPEG/WebP) route to PIL when importable (skip-if-absent test) and
+otherwise land in the poison-tolerant `decode_error` column.
+`deterministic_fake=True` remains for the exact-SQL-twin oracle path
+(sha256-derived features).
 
 Reference analog: the GPT-4o vision path rendered page PNGs and sent them
 out-of-process (/root/reference/src/ingest.py:57-63,79-99); here the binary
@@ -181,12 +182,6 @@ def _decode_image_real(payload: bytes) -> np.ndarray:
 
 # -- audio: from-scratch WAV (RIFF/PCM) decode --------------------------------
 
-AUDIO_FEATURES_SCHEMA = (
-    "media_id bigint, mime string, duration_ms int, "
-    "feat array<float>, decode_error string"
-)
-
-
 def _wav_decode(payload: bytes) -> np.ndarray:
     """From-scratch WAV parse (public RIFF/WAVE layout): PCM 8/16-bit,
     any channel count (averaged to mono) → float64 samples in [-1, 1]."""
@@ -217,54 +212,6 @@ def _wav_decode(payload: bytes) -> np.ndarray:
     if n_ch > 1:
         x = x[: len(x) - len(x) % n_ch].reshape(-1, n_ch).mean(axis=1)
     return x
-
-
-def _audio_features_from_samples(x: np.ndarray) -> np.ndarray:
-    """FEAT_DIM RMS energies over equal time windows."""
-    if len(x) == 0:
-        return np.zeros(FEAT_DIM)
-    bounds = np.linspace(0, len(x), FEAT_DIM + 1).astype(int)
-    return np.array(
-        [
-            float(np.sqrt(np.mean(np.square(x[bounds[i] : max(bounds[i + 1], bounds[i] + 1)]))))
-            for i in range(FEAT_DIM)
-        ]
-    )
-
-
-def _decode_audio_real(payload: bytes) -> np.ndarray:
-    if payload[:4] == b"RIFF":
-        return _audio_features_from_samples(_wav_decode(payload))
-    raise NotImplementedError(
-        "unsupported audio format (from-scratch decoder covers WAV/PCM; "
-        "install ffmpeg bindings on the cluster for MP3/OGG/…)"
-    )
-
-
-def audio_features(media: DataFrame) -> DataFrame:
-    """binary WAV → FEAT_DIM windowed-RMS features, Arrow-batched,
-    poison-tolerant (same shape as image_features)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for mid, payload, meta in zip(b["media_id"], b["payload"], b["meta"]):
-                rec = {
-                    "media_id": int(mid),
-                    "mime": meta["mime"] if meta is not None else None,
-                    "duration_ms": meta["duration_ms"] if meta is not None else None,
-                    "feat": None,
-                    "decode_error": None,
-                }
-                try:
-                    vec = _decode_audio_real(bytes(payload))
-                    rec["feat"] = [float(round(v, 6)) for v in vec]
-                except Exception as e:
-                    rec["decode_error"] = f"{type(e).__name__}: {e}"[:200]
-                out.append(rec)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
 
 
 def _decode_image_fake(payload: bytes) -> np.ndarray:

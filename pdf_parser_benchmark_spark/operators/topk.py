@@ -1,11 +1,10 @@
-"""W2/W3/O-series — window top-k, best+runner-up-with-margin, greedy dedup.
+"""W2 — window top-k.
 
 - top_k_per_group: retrieval keep top SIMILARITY_TOP_K
   (/root/reference/src/rag.py:192, k=5 /root/reference/src/config.py:30).
-- best_with_margin: fuzzy-match keeps (best, second) and the ambiguity gap
-  (rename_pdfs.py:79-90,146-150) — row_number + lead over one window.
-- greedy_claim: one winner per source, preventing two books claiming one
-  PDF (rename_pdfs.py:136,146-152) — rank-1 window over the source.
+
+W3 (best+runner-up margin) and U3 (greedy claim) are single windows written
+inline in their queries, ``q_best_second_gap`` and ``q_greedy_dedup``.
 """
 
 from __future__ import annotations
@@ -23,40 +22,3 @@ def top_k_per_group(
         .drop("rn")
     )
 
-
-def best_with_margin(
-    df: DataFrame,
-    group_cols: list[str],
-    score_col: str,
-    tiebreak: list[Column],
-    min_score: float = 0.86,
-    min_gap: float = 0.05,
-) -> DataFrame:
-    """→ rank-1 rows with best/second scores, gap, and `ambiguous` flag."""
-    w = Window.partitionBy(*group_cols).orderBy(
-        F.desc(score_col), *tiebreak
-    )
-    ranked = (
-        df.withColumn("rn", F.row_number().over(w))
-        .withColumn("second_score", F.lead(score_col).over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    second = F.coalesce(F.col("second_score"), F.lit(0.0))
-    gap = F.col(score_col) - second
-    return ranked.withColumn("gap", F.round(gap, 6)).withColumn(
-        "ambiguous",
-        (F.col(score_col) < min_score) | (gap < min_gap),
-    )
-
-
-def greedy_claim(
-    df: DataFrame, source_col: str, score_col: str, tiebreak: list[Column]
-) -> DataFrame:
-    """Keep the single best claimant per source."""
-    w = Window.partitionBy(source_col).orderBy(F.desc(score_col), *tiebreak)
-    return (
-        df.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )

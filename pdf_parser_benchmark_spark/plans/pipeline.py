@@ -15,7 +15,12 @@ partitioned, resumable table write.
 Scale design (north_rule):
 - one kernel: ``_extract_batches`` is the only per-doc loop and
   ``extract_splits`` its only call site — batch and resumable paths both
-  go through it, so every path emits the same bytes;
+  go through it, so every path emits the same bytes. Per document it
+  returns one representation, the canonical record of
+  ``extract_document_json`` (the golden files' function), and its scalars;
+  ``text``, ``spans``, ``chunk_count``, ``parser`` and ``source`` are one
+  ``from_json`` over ``canonical`` in the JVM, which Catalyst prunes to the
+  fields a reader uses;
 - parallelism: zero-shuffle by default — task granularity comes from the
   input splits; ``n_tasks`` forces a repartition whose only key is
   ``xxhash64(url)``, uniform regardless of the zipf host distribution;
@@ -46,62 +51,61 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..extract.assemble import extract_document
-from ..canonical import encode_doc
+from ..extract.assemble import extract_document_json
 from ..sources import checkpoint as ckpt
 # perfbench's tracing hooks look up lineage_counters and read_extracted here
 from ..sources.lineage import SUMMARY_COUNTERS, lineage_counters, summary_metrics  # noqa: F401
 from ..sources.sink import read_extracted, write_extracted  # noqa: F401
 
+_SPANS = (
+    "array<struct<start:int,end:int,kind:string,page:int,"
+    "chapter:string,section:string>>"
+)
 EXTRACTED_SCHEMA = (
-    "url string, warc_ts timestamp, lang string, text string, "
-    "spans array<struct<start:int,end:int,kind:string,page:int,"
-    "chapter:string,section:string>>, "
+    f"url string, warc_ts timestamp, lang string, text string, spans {_SPANS}, "
     "chunk_count int, parser string, source string, "
     "canonical string, n_bytes_in bigint, error string, split_id int"
 )
+# what the kernel returns: the canonical record is the only content column
+_KERNEL_SCHEMA = (
+    "url string, warc_ts timestamp, lang string, canonical string, "
+    "n_bytes_in bigint, error string, split_id int"
+)
+# the fields of the canonical record (canonical.encode_doc) that become columns
+_DOC_SCHEMA = (
+    f"text string, spans {_SPANS}, "
+    "meta struct<chunk_count:int,parser:string,source:string>"
+)
+# Jackson's default cap on one JSON string is 20M chars: a longer text would
+# parse to null
+_DOC_OPTIONS = {"maxStringLen": str(2**31 - 1)}
 
 
 def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-    """Arrow batch → extracted rows. Per-document try/except keeps poison
-    documents from killing the task (reference precedent: per-page and
-    per-book continue-on-error, /root/reference/src/ingest.py:154-165)."""
+    """Arrow batch → one canonical record per document (_KERNEL_SCHEMA).
+    Per-document try/except keeps poison documents from killing the task
+    (reference precedent: per-page and per-book continue-on-error in the
+    reference's src/ingest.py:154-165): such a row has a null ``canonical``
+    and a non-null ``error``."""
     import pandas as pd
 
-    cols = (
-        "url", "warc_ts", "lang", "text", "spans", "chunk_count",
-        "parser", "source", "canonical", "n_bytes_in", "error", "split_id",
-    )
     for b in batches:
-        out: dict[str, list] = {c: [] for c in cols}
-        for url, ts, payload, lang, split_id in zip(
-            b["url"], b["warc_ts"], b["html"], b["lang"], b["split_id"]
-        ):
-            text = spans = chunk_count = parser = source = canonical = error = None
+        canonical, n_bytes_in, errors = [], [], []
+        for url, payload in zip(b["url"], b["html"]):
+            doc = error = None
+            payload = bytes(payload) if payload is not None else b""
             try:
-                payload = bytes(payload) if payload is not None else b""
-                rec = extract_document(url, payload)
-                text, spans = rec["text"], rec["spans"]
-                meta = rec["meta"]
-                chunk_count, parser, source = (
-                    meta["chunk_count"], meta["parser"], meta["source"],
-                )
-                canonical = encode_doc(rec["url"], text, spans, meta)
+                doc = extract_document_json(url, payload)
             except Exception as e:  # poison document
                 error = f"{type(e).__name__}: {e}"[:500]
-            out["url"].append(url)
-            out["warc_ts"].append(ts)
-            out["lang"].append(lang)
-            out["text"].append(text)
-            out["spans"].append(spans)
-            out["chunk_count"].append(chunk_count)
-            out["parser"].append(parser)
-            out["source"].append(source)
-            out["canonical"].append(canonical)
-            out["n_bytes_in"].append(len(payload) if payload is not None else 0)
-            out["error"].append(error)
-            out["split_id"].append(int(split_id))
-        yield pd.DataFrame(out)
+            canonical.append(doc)
+            n_bytes_in.append(len(payload))
+            errors.append(error)
+        yield pd.DataFrame({
+            "url": b["url"], "warc_ts": b["warc_ts"], "lang": b["lang"],
+            "canonical": canonical, "n_bytes_in": n_bytes_in, "error": errors,
+            "split_id": b["split_id"],
+        })
 
 
 def salted_host_key(url_col: str = "url", salt_buckets: int = 16):
@@ -150,7 +154,18 @@ def extract_splits(df: DataFrame, n_tasks: int | None = None) -> DataFrame:
     shuffle-free and task granularity comes from the input splits."""
     if n_tasks is not None:
         df = df.repartition(n_tasks, F.xxhash64("url"))
-    return df.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
+    # the other content columns are views of the record. The parse gets its
+    # own column so the plan holds one from_json (fields taken from it
+    # directly in one select would each parse the record again); Catalyst
+    # prunes it to the fields a reader uses, or drops it if it uses none.
+    doc = df.mapInPandas(_extract_batches, schema=_KERNEL_SCHEMA).select(
+        "*", F.from_json("canonical", _DOC_SCHEMA, _DOC_OPTIONS).alias("_doc")
+    )
+    return doc.select(
+        "url", "warc_ts", "lang", "_doc.text", "_doc.spans",
+        "_doc.meta.chunk_count", "_doc.meta.parser", "_doc.meta.source",
+        "canonical", "n_bytes_in", "error", "split_id",
+    )
 
 
 def extract_pages(

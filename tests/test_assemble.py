@@ -10,7 +10,6 @@ from pdf_parser_benchmark_spark.extract.assemble import (
     assemble,
     boilerplate_lines,
     extract_document,
-    extract_reproducible_id,
     infer_chunk_type,
     source_stem,
     strip_boilerplate_text,
@@ -75,11 +74,18 @@ def test_chunk_type_ordered_map():
 
 # --- reproducible id (ingest.py:66-69) -------------------------------------
 
-def test_repro_regex():
-    assert extract_reproducible_id("see Reproducible 4.3 here") == "4.3"
-    assert extract_reproducible_id("reproducible 7B attached") == "7B"
-    assert extract_reproducible_id("Reproducible 12") == "12"
-    assert extract_reproducible_id("no marker") is None
+def test_repro_regex(spark):
+    from pdf_parser_benchmark_spark.functions.text import reproducible_id
+
+    cases = {
+        "see Reproducible 4.3 here": "4.3",
+        "reproducible 7B attached": "7B",
+        "Reproducible 12": "12",
+        "no marker": "",
+    }
+    df = spark.createDataFrame([(t,) for t in cases], "t string")
+    got = {r["t"]: r["id"] for r in df.select("t", reproducible_id(df["t"]).alias("id")).collect()}
+    assert got == cases
 
 
 # --- chapter/section propagation (ingest.py:167-205) -----------------------

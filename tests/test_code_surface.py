@@ -3,7 +3,11 @@ import chain from one of the non-test surfaces (`__spark_entry__.py`, the
 spark-submit job, the bench scripts, the benchmark harness and the tools).
 
 A module that only tests import is library surface nothing runs: delete it,
-or wire it into a surface and record in COVERAGE.md why it stays. The walk
+or wire it into a surface and record in COVERAGE.md why it stays. The same
+holds one level down: every top-level function and class of the package is
+named by some non-test file outside its own body, registered by a
+decorator that stores it (``queries.query``), or listed in
+``UNREFERENCED_KEPT`` with the reason it stays. The walk
 is static (AST): top-level and nested imports, relative imports, and string
 literals in files that import ``importlib`` (``perfbench/tracing.py`` imports
 its hooked modules by name)."""
@@ -13,6 +17,7 @@ from __future__ import annotations
 import ast
 import glob
 import os
+import re
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "pdf_parser_benchmark_spark"
@@ -106,3 +111,74 @@ def test_every_package_module_is_reached_from_a_surface():
     missing = [s for s in SURFACES if not os.path.isfile(os.path.join(ROOT, s))]
     assert not missing, missing
     assert unreached_modules() == []
+
+
+# Top-level definitions that no non-test file references, each kept on
+# purpose. Everything else a non-test file does not name is deleted.
+UNREFERENCED_KEPT = {
+    ("sources/warc.py", "read_warc_pages_split"):
+        "the only way to split one large .warc.gz across tasks; the carried "
+        "WARC member-split item builds on it (COVERAGE.md)",
+    ("sources/checkpoint.py", "compact_manifest"):
+        "manifest maintenance between jobs: it folds the one file per commit "
+        "batch per run into one file per split (COVERAGE.md)",
+    ("synth/pages.py", "generate_pages_local"):
+        "driver-side rows of the same generator for Spark-free test fixtures",
+    ("extract/html_extractor.py", "parse_html_blocks_stdlib"):
+        "the stdlib reference tokenizer the fast path is differentially "
+        "tested against",
+    ("extract/html_extractor.py", "parse_html_blocks_fast"):
+        "the fast tokenizer without its stdlib fallback: the subject of the "
+        "differential tests",
+}
+# decorators that register the function they wrap (queries.QUERIES)
+REGISTERING_DECORATORS = {"query"}
+_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _names_used(node: ast.AST) -> set[str]:
+    """Identifiers a subtree refers to: names, attributes, imported names,
+    and string literals that are one identifier (getattr-style lookups such
+    as ``perfbench/tracing.py``'s hook table)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if _IDENT.fullmatch(n.value):
+                out.add(n.value)
+    return out
+
+
+def _decorator_name(d: ast.expr) -> str | None:
+    d = d.func if isinstance(d, ast.Call) else d
+    return d.id if isinstance(d, ast.Name) else None
+
+
+def unreferenced_definitions() -> list[tuple[str, str]]:
+    """(package-relative path, name) of every top-level function or class
+    that no non-test file references outside its own body."""
+    pkg_files = sorted(_package_modules().values())
+    surface_files = [s for s in SURFACES if not s.startswith(PKG + "/")]
+    defs, used = [], set()
+    for rel in pkg_files + surface_files:
+        tree = ast.parse(open(os.path.join(ROOT, rel)).read(), filename=rel)
+        for stmt in tree.body:
+            names = _names_used(stmt)
+            if rel in pkg_files and isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                names.discard(stmt.name)
+                if not any(_decorator_name(d) in REGISTERING_DECORATORS
+                           for d in stmt.decorator_list):
+                    defs.append((os.path.relpath(rel, PKG), stmt.name))
+            used |= names
+    return sorted(d for d in defs if d[1] not in used)
+
+
+def test_every_top_level_definition_is_referenced_outside_tests():
+    assert unreferenced_definitions() == sorted(UNREFERENCED_KEPT)

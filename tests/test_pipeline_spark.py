@@ -7,13 +7,21 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from pdf_parser_benchmark_spark.plans.pipeline import extract_pages, run_pipeline
+from pdf_parser_benchmark_spark.plans.pipeline import (
+    EXTRACTED_SCHEMA,
+    extract_pages,
+    run_pipeline,
+)
 from pdf_parser_benchmark_spark.sources.lineage import SUMMARY_COUNTERS, lineage_counters
 from pdf_parser_benchmark_spark.sources.sink import read_extracted
 from pdf_parser_benchmark_spark.synth.pages import generate_pages_df
 
 N_ROWS = 120
+POISON_URL = "https://h.example/poison.pdf"
+# the columns the table derives from ``canonical`` outside the kernel
+DERIVED = ("text", "spans", "chunk_count", "parser", "source")
 
 
 @pytest.fixture(scope="module")
@@ -451,7 +459,7 @@ def poisoned(spark, pages):
     import pandas as pd
 
     bad = spark.createDataFrame(pd.DataFrame([{
-        "url": "https://h.example/poison.pdf",
+        "url": POISON_URL,
         "warc_ts": pd.Timestamp("2026-01-01"),
         "html": b"%PDF-1.4 garbage without structure",
         "text": None,
@@ -558,3 +566,63 @@ def test_summary_observed_above_the_write_exchange(spark, pages, tmp_path):
         assert observe[0] < exchange[0]
         indent = [len(lines[i]) - len(lines[i].lstrip(" +-")) for i in (observe[0], exchange[0])]
         assert indent[0] < indent[1]
+
+
+def test_kernel_returns_only_the_canonical_record(poisoned):
+    """The Python kernel hands Arrow one content column, ``canonical``, next
+    to the row's scalars; the other content columns are derived in the JVM."""
+    from pdf_parser_benchmark_spark.plans.pipeline import _extract_batches
+    from pdf_parser_benchmark_spark.sources.checkpoint import with_split_id
+
+    batch = with_split_id(poisoned, 8).toPandas()
+    (out,) = _extract_batches(iter([batch]))
+    assert list(out.columns) == [
+        "url", "warc_ts", "lang", "canonical", "n_bytes_in", "error", "split_id",
+    ]
+    assert len(out) == N_ROWS + 1
+
+
+def test_extracted_schema_is_exact(pages):
+    """Names, order, types and nullability of the extracted frame."""
+    assert extract_pages(pages, n_splits=8).schema == StructType.fromDDL(EXTRACTED_SCHEMA)
+
+
+def test_derived_columns_equal_extract_document(poisoned):
+    """text, spans, chunk_count, parser and source are the fields of
+    extract_document's record for every row; the poison row has all five
+    null and an error."""
+    from pdf_parser_benchmark_spark.extract.assemble import extract_document
+
+    payloads = {r["url"]: bytes(r["html"]) for r in poisoned.select("url", "html").collect()}
+    rows = extract_pages(poisoned, n_splits=8).collect()
+    assert len(rows) == N_ROWS + 1
+    for r in rows:
+        got = [r[c] for c in DERIVED]
+        if r["url"] == POISON_URL:
+            assert r["error"] is not None and r["canonical"] is None
+            assert got == [None] * len(DERIVED)
+            continue
+        rec = extract_document(r["url"], payloads[r["url"]])
+        assert r["error"] is None
+        got[1] = [s.asDict() for s in got[1]]
+        meta = rec["meta"]
+        assert got == [rec["text"], rec["spans"],
+                       meta["chunk_count"], meta["parser"], meta["source"]]
+
+
+def test_text_longer_than_the_json_string_cap_is_derived(spark):
+    """A document text of 21M chars (over Jackson's default 20M-char string
+    cap) still comes out of canonical whole."""
+    import pandas as pd
+
+    n = 21_000_000
+    page = spark.createDataFrame(pd.DataFrame([{
+        "url": "https://h.example/long.html",
+        "warc_ts": pd.Timestamp("2026-01-01"),
+        "html": b"<main><p>" + b"a" * n + b"</p></main>",
+        "text": None,
+        "lang": "en",
+    }]), schema="url string, warc_ts timestamp, html binary, text string, lang string")
+    (row,) = extract_pages(page, n_splits=1).select(
+        F.length("text").alias("n"), "error").collect()
+    assert row["error"] is None and row["n"] == n

@@ -55,6 +55,23 @@ def test_extraction_plan_is_shuffle_free(spark):
     assert simple.count("_extract_batches") == 1
 
 
+def test_extracted_columns_parse_canonical_once(spark):
+    """text, spans and meta come from one from_json over canonical: the full
+    frame parses each record once, and a reader of url and canonical only
+    parses nothing."""
+    from pdf_parser_benchmark_spark.plans.pipeline import extract_pages
+    from pdf_parser_benchmark_spark.synth.pages import generate_pages_df
+
+    df = extract_pages(generate_pages_df(spark, 10, partitions=2), n_splits=8)
+
+    def optimized(d):
+        return d._jdf.queryExecution().optimizedPlan().toString()
+
+    assert optimized(df).count("from_json(") == 1
+    assert optimized(df.select("text")).count("from_json(") == 1
+    assert "from_json(" not in optimized(df.select("url", "canonical"))
+
+
 @pytest.mark.parametrize(
     "threshold, top_join_key",
     [(None, "o_custkey"), ("1", "l_orderkey"), ("-1", "l_orderkey")],

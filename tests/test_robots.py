@@ -71,18 +71,6 @@ def test_tie_length_prefers_allow():
     assert robots_allowed(tie, "b", "/dir/x")  # 5 == 5 → Allow wins
 
 
-def test_sitemap_directives_from_robots():
-    from pdf_parser_benchmark_spark.extract.robots import (
-        sitemap_urls_from_robots,
-    )
-
-    assert sitemap_urls_from_robots(ROBOTS) == ["https://x.example/sitemap.xml"]
-    multi = "Sitemap: https://a/s1.xml\nUser-agent: *\nDisallow: /\nsitemap: https://a/s2.xml\n"
-    assert sitemap_urls_from_robots(multi) == [
-        "https://a/s1.xml", "https://a/s2.xml",
-    ]
-
-
 def test_parse_sitemap_urlset_and_index():
     from pdf_parser_benchmark_spark.extract.robots import parse_sitemap
 
