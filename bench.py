@@ -264,8 +264,8 @@ def main() -> None:
     # over every query batch), then serve searches from the stored index
     # via the broadcast-LUT ADC scan (pq_topk_lut: numpy gather + per-batch
     # partial top-R, zero joins on the code stream). r4's 38.8 s lane
-    # conflated training with search; the relational ADC join is kept as
-    # the oracle twin (pq_topk) and pinned equal in test_operators_spark.
+    # conflated training with search; the relational ADC join survives only
+    # as test_operators_spark's reference, pinned equal to this scan.
     from pdf_parser_benchmark_spark.operators.knn import pq_fit, pq_topk_lut
 
     t0 = time.monotonic()

@@ -844,72 +844,18 @@ def semantic_dedup(
 # dedup clusters: connected components over near-dup pairs
 # ---------------------------------------------------------------------------
 
-def connected_components(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 20
+def connected_components_two_phase(
+    nodes: DataFrame, edges: DataFrame, max_iter: int = 30
 ) -> DataFrame:
     """(id) nodes + (id_a, id_b) undirected edges → (id, cluster), where
     cluster is the minimum id reachable — the canonical representative of
     each near-duplicate group (what a training pipeline keeps one of).
-
-    Hash-min label propagation as iterative DataFrame joins: per round,
-    every node takes the min of its own label and its neighbors' labels;
-    converged when no label changes. Rounds are bounded by the component
-    diameter — near-dup clusters are a handful of docs, so this terminates
-    in 2-4 rounds in practice (a 10^12-row general graph would want the
-    two-phase small-star/large-star variant, same join shapes). Only
-    (id, label) pairs ever shuffle; the convergence check is a count."""
-    sym = (
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .distinct()
-        .persist()
-    )
-    labels = nodes.select(F.col("id"), F.col("id").alias("cluster")).persist()
-    try:
-        changed = -1
-        for _ in range(max_iter):
-            nbr = sym.join(
-                labels.withColumnRenamed("id", "src"), "src"
-            ).select(F.col("dst").alias("id"), "cluster")
-            new = (
-                labels.unionByName(nbr)
-                .groupBy("id")
-                .agg(F.min("cluster").alias("cluster"))
-                .persist()
-            )
-            changed = (
-                new.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.cluster") != F.col("o.cluster"))
-                .count()
-            )
-            labels.unpersist()
-            labels = new
-            if changed == 0:
-                break
-        if changed != 0:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds "
-                f"({changed} labels still changing); raise max_iter — an "
-                "unconverged fixpoint must not pass as a result"
-            )
-        return labels
-    finally:
-        sym.unpersist()
-        _LIVE_INTERMEDIATES.append(labels)  # released after materialization
-
-
-def connected_components_two_phase(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 30
-) -> DataFrame:
-    """Same contract as connected_components — (id) + (id_a, id_b) →
-    (id, cluster = min reachable id) — via alternating large-star /
-    small-star rounds (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", ACM SoCC'14, public algorithm). Converges in O(log² n)
-    rounds on ANY graph, so a path-shaped duplicate chain of length 10⁶
-    that defeats diameter-bounded hash-min propagation still terminates.
+    Alternating large-star / small-star rounds (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", ACM SoCC'14, public algorithm)
+    converge in O(log² n) rounds on ANY graph, so a path-shaped duplicate
+    chain of length 10⁶, which defeats diameter-bounded hash-min label
+    propagation, still terminates; a fixpoint not reached in max_iter
+    rounds raises.
 
     Scale shape: no adjacency lists are ever materialized — per-node mins
     come from groupBy, neighbors re-join against them — so each round

@@ -249,8 +249,8 @@ def _exact_rerank(
     """Shared two-stage tail: fetch only the candidates' full vectors
     (broadcast semi-shape — Q·rerank rows, never the corpus), score exact
     cosine, return the exact top k with (desc score, asc id) tie-break.
-    Used by pq_topk, pq_topk_lut, and opq_topk so the rounding/tie rules
-    can never diverge between the twins (r5 review finding)."""
+    Used by `_adc_scan` and opq_topk, so every ADC search re-ranks by the
+    same rounding and tie rules."""
     pool = corpus.join(
         F.broadcast(cands), corpus_id
     ).join(
@@ -573,93 +573,145 @@ def pq_fit(
     return cb, enc
 
 
-def pq_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 3,
-    m: int = 4,
-    dim: int = 64,
-    codes: int = 16,
-    iterations: int = 3,
-    query_id: str = "qid",
-    query_vec: str = "qvec",
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    rerank: int = 0,
-    codebooks: DataFrame | None = None,
-    encoded: DataFrame | None = None,
-) -> DataFrame:
-    """PQ top-k via asymmetric distance computation (ADC): per query build
-    the m×codes subspace-distance table (broadcast — m·codes rows per
-    query), join it to the exploded code stream, sum per (query, vector).
-    The corpus side never ships vectors — only (id, subspace, code) — which
-    is the whole point at 10^12 vectors.
+def _adc_queries(who: str, queries: DataFrame, corpus: DataFrame | None,
+                 encoded: DataFrame, k: int, rerank: int, max_queries: int,
+                 query_id: str, query_vec: str, corpus_id: str):
+    """The query side of every ADC search → (qids, Q, None), or
+    (None, None, the typed empty result) when `queries` has no rows.
 
-    rerank > k: keep the top `rerank` ADC candidates per query, fetch only
-    those candidates' full vectors (semi-join — Q·rerank rows, never the
-    corpus), score exact cosine, return the exact top k. This is the
-    standard two-stage PQ search (coarse ADC recall set → exact re-rank);
-    output schema becomes (qid, vec_id, score, rank) like the exact paths.
+    Queries are the bounded side: the collect stops at max_queries + 1
+    rows, so an unbounded query side raises here before it can
+    materialize on the driver. The empty result takes its id types from
+    the queries frame and from the corpus (else the code stream's pqid),
+    and names its score column as the non-empty result would."""
+    import numpy as np
 
-    codebooks/encoded: pass pq_fit's outputs to SKIP the in-call fit — the
-    production shape trains once, persists (cb is m·codes tiny rows, enc is
-    m bytes/vector), and serves every query batch from the stored index; a
-    10^12-vector corpus is encoded exactly once."""
-    sub = dim // m
-    if (codebooks is None) != (encoded is None):
-        raise ValueError("pass codebooks and encoded together")
-    if codebooks is None:
-        cb, enc = pq_fit(corpus, corpus_id, corpus_vec, m=m, dim=dim,
-                         k=codes, iterations=iterations)
-    else:
-        cb, enc = codebooks, encoded
-    qsub = queries.select(
-        query_id,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"),
-                        F.slice(F.col(query_vec), s * sub + 1, sub).alias("qs"),
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("x"),
-    ).select(query_id, "x.s", "x.qs")
-    tables = (
-        qsub.join(F.broadcast(cb), "s")
-        .withColumn("d2", F.round(l2_sq(F.col("qs"), F.col("centroid")), 9))
-        .select(query_id, "s", "cid", "d2")
-    )
-    enc_long = enc.select(
-        "pqid",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("s"), F.col(f"c{s}").alias("cid"))
-                    for s in range(m)
-                ]
-            )
-        ).alias("x"),
-    ).select("pqid", "x.s", "x.cid")
-    scored = (
-        enc_long.join(F.broadcast(tables), ["s", "cid"])
-        .groupBy(query_id, "pqid")
-        .agg(F.round(F.sum("d2"), 6).alias("adc"))
-    )
-    w = Window.partitionBy(query_id).orderBy(F.asc("adc"), F.asc("pqid"))
-    if rerank <= k:
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select(query_id, F.col("pqid").alias(corpus_id), "adc",
-                    F.col("rn").alias("rank"))
+    qrows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
+    if len(qrows) > max_queries:
+        raise ValueError(
+            f"{who} queries side exceeds max_queries={max_queries}; the "
+            "query side is collected to the driver — batch it or raise "
+            "max_queries explicitly"
         )
-    cands = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= rerank)
-        .select(query_id, F.col("pqid").alias(corpus_id))
+    if qrows:
+        qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
+        Q = np.array([[np.float32(v) for v in r[1]] for r in qrows],
+                     dtype=np.float32)
+        return qids, Q, None
+    from pyspark.sql.types import (
+        DoubleType, IntegerType, StructField, StructType,
+    )
+
+    ids = (corpus.schema[corpus_id] if corpus is not None
+           else encoded.schema["pqid"])
+    empty = encoded.sparkSession.createDataFrame([], StructType([
+        StructField(query_id, queries.schema[query_id].dataType),
+        StructField(corpus_id, ids.dataType),
+        StructField("score" if rerank > k else "adc", DoubleType()),
+        StructField("rank", IntegerType()),
+    ]))
+    return None, None, empty
+
+
+def _codebook_array(codebooks: DataFrame, m: int, codes: int, sub: int):
+    """pq_fit's (s, cid, centroid) rows as one (m, codes, sub) float32 array."""
+    import numpy as np
+
+    CB = np.zeros((m, codes, sub), dtype=np.float32)
+    for r in codebooks.collect():
+        CB[r["s"], r["cid"]] = np.asarray(r["centroid"], dtype=np.float32)
+    return CB
+
+
+def _adc_scan(queries: DataFrame, corpus: DataFrame | None,
+              encoded: DataFrame, qids, D, slot, list_col: str | None, k: int,
+              rerank: int, query_id: str, query_vec: str, corpus_id: str,
+              corpus_vec: str) -> DataFrame:
+    """The one ADC scanner behind pq_topk_lut (so opq_topk) and
+    ivfpq_topk. D[q, j, s, c]: query q's table for its j-th probe slot,
+    subvector s against code c; slot[q, l]: the slot of list l for q, −1
+    if q does not probe l. PQ is the one-list case (list_col None); for
+    IVF-PQ the probed lists reach the scan as a pushed `list_col IN (...)`
+    filter, so a code stream partitioned by list skips unprobed partitions.
+
+    The tables ship in the mapInPandas closure; packed codes never unpack.
+    Per Arrow batch (rows sorted by pqid) and query, each probed row scores
+    Σ_s D[q, slot, s, code_s] summed in subspace order from 0.0, rounded
+    HALF_UP to 6 on the binary value (distances are non-negative), and a
+    stable argsort keeps the batch's top R = max(k, rerank), ties to the
+    lowest pqid — every global top-R row survives any batching, so output
+    is partitioning-invariant. Only that candidate stream shuffles, into
+    one ascending window (`_scored_topk` ranks descending). rerank > k
+    hands the top `rerank` to `_exact_rerank`, which needs `corpus`."""
+    import numpy as np
+
+    if rerank > k and corpus is None:
+        raise ValueError("rerank needs the corpus vectors")
+    nq, _, m, _ = D.shape
+    R = max(k, rerank)
+    code_cols = [f"c{s}" for s in range(m)]
+
+    def scan(batches):
+        import numpy as _np
+        import pandas as _pd
+
+        for b in batches:
+            if not len(b):
+                continue
+            ids = b["pqid"].to_numpy(dtype=_np.int64)
+            order = _np.argsort(ids, kind="stable")       # id-asc tie-break
+            ids = ids[order]
+            lists = (
+                _np.zeros(len(ids), dtype=_np.int64) if list_col is None
+                else b[list_col].to_numpy(dtype=_np.int64)[order]
+            )
+            C = _np.stack(
+                [b[c].to_numpy(dtype=_np.int64)[order] for c in code_cols],
+                axis=1,
+            )
+            out_q, out_id, out_d = [], [], []
+            for qi in range(nq):
+                sel = slot[qi][lists]                     # (n,) probe slot
+                mask = sel >= 0
+                if not mask.any():
+                    continue
+                sl, Cm = sel[mask], C[mask]
+                adc = _np.zeros(len(sl), dtype=_np.float64)
+                for s in range(m):
+                    adc += D[qi, sl, s, Cm[:, s]]
+                adc = _np.floor(adc * 1e6 + 0.5) / 1e6    # HALF_UP to 6
+                top = _np.argsort(adc, kind="stable")[:R]
+                out_q.append(_np.full(len(top), qids[qi]))
+                out_id.append(ids[mask][top])
+                out_d.append(adc[top])
+            if not out_q:
+                continue
+            yield _pd.DataFrame(
+                {
+                    "qid_": _np.concatenate(out_q),
+                    "pqid": _np.concatenate(out_id),
+                    "adc": _np.concatenate(out_d),
+                }
+            )
+
+    stream = encoded.select("pqid", *code_cols)
+    if list_col is not None:
+        probed = np.flatnonzero((slot >= 0).any(axis=0)).tolist()
+        stream = encoded.select("pqid", list_col, *code_cols).filter(
+            F.col(list_col).isin(probed)
+        )
+    cand = stream.mapInPandas(
+        scan, "qid_ long, pqid long, adc double"
+    ).withColumnRenamed("qid_", query_id)
+    w = Window.partitionBy(query_id).orderBy(F.asc("adc"), F.asc("pqid"))
+    ranked = cand.withColumn("rn", F.row_number().over(w))
+    if rerank <= k:
+        return ranked.filter(F.col("rn") <= k).select(
+            query_id, F.col("pqid").alias(corpus_id), "adc",
+            F.col("rn").alias("rank")
+        )
+    cands = ranked.filter(F.col("rn") <= rerank).select(
+        query_id, F.col("pqid").alias(corpus_id)
     )
     return _exact_rerank(queries, corpus, cands, k, query_id, query_vec,
                          corpus_id, corpus_vec)
@@ -682,37 +734,21 @@ def pq_topk_lut(
     encoded: DataFrame | None = None,
     max_queries: int = 10_000,
 ) -> DataFrame:
-    """ADC top-k via broadcast LUT gather — the scale-shaped twin of
-    :func:`pq_topk` (VERDICT r4 item 3: the relational explode+join+sum ADC
-    turns every corpus vector into m joined rows; at 10^12 vectors that code
-    stream is shuffle-heavy and the per-row DataFrame overhead swamps the
-    microseconds a LUT scan costs).
+    """PQ top-k via asymmetric distance computation (ADC, Jégou et al.
+    2011): per query, the m×codes table of subspace distances to the
+    codebook, computed driver-side; `_adc_scan` (one list) ranks every
+    vector by its summed table lookups, so the corpus side ships only its
+    m byte codes. The tables equal SQL `round(l2_sq(q_s, centroid), 9)`
+    value for value: float32 elementwise squared diff, float64 sequential
+    fold from 0.0, Spark's HALF_UP decimal round (BigDecimal.valueOf
+    semantics via Decimal(repr(x))) — test_pq_lut_matches_relational_adc
+    pins the result to that explode+join+groupBy ADC on a shared fit.
 
-    Here the per-query subspace-distance tables (Q·m·codes doubles — a few
-    KB) are computed driver-side and shipped to executors inside the
-    mapInPandas closure (broadcast-by-value); each Arrow batch of packed
-    codes (pqid, c0..c{m-1}) is scored with a numpy gather
-    ``adc[q,b] = Σ_s D[q, s, C[b,s]]`` and immediately reduced to a
-    per-batch top-R per query — so the only thing that ever shuffles is the
-    tiny candidate stream (≤ batches·Q·R rows), never the corpus. Zero
-    joins on the code stream, zero explode, one window over candidates.
-
-    Numeric parity with the relational path (so both twins rank
-    identically): the distance tables replicate l2_sq bit-for-bit —
-    float32 elementwise squared diff (zip_with over array<float>), float64
-    sequential accumulate (F.aggregate from lit(0.0)), then Spark's
-    HALF_UP decimal round to 9 (BigDecimal.valueOf semantics via
-    Decimal(repr(x))). Batch ADC sums round HALF_UP to 6 on the binary
-    value (distances are non-negative), matching F.round(sum, 6) except in
-    shortest-decimal-repr midpoint corner cases; test_operators_spark pins
-    LUT == relational on the real embeddings tables.
-
-    queries must be the bounded side (same contract as brute_force_topk's
-    broadcast): Q vectors are collected to the driver, and max_queries
-    enforces the contract loudly — the collect is capped at
-    max_queries + 1 rows, so an unbounded query side raises instead of
-    OOMing the driver (VERDICT r5 item 7).
-    rerank/codebooks/encoded behave exactly as in pq_topk."""
+    rerank > k: exact cosine re-rank of the top `rerank` ADC candidates
+    (the standard two-stage PQ search); the schema becomes
+    (qid, vec_id, score, rank) like the exact paths. codebooks/encoded:
+    pq_fit's outputs, to skip the in-call fit — train once, persist, serve
+    every query batch. queries are the bounded side (`_adc_queries`)."""
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
@@ -728,50 +764,16 @@ def pq_topk_lut(
     else:
         cb, enc = codebooks, encoded
 
-    # limit() caps what ever reaches the driver — the guard fires BEFORE an
-    # oversized query side could materialize driver-side
-    qrows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_topk_lut queries side exceeds max_queries={max_queries}; "
-            "the LUT path collects queries to the driver by contract — "
-            "batch the query side or raise max_queries explicitly"
-        )
-    if not qrows:  # empty queries: empty result, like the relational twin
-        from pyspark.sql.types import (
-            DoubleType, IntegerType, StructField, StructType,
-        )
-
-        spark = (corpus if corpus is not None else enc).sparkSession
-        # schema from the ACTUAL id column types (ADVICE r5): query id from
-        # the queries frame; corpus id from the corpus frame when present,
-        # else the encoded frame's pqid
-        qid_type = queries.schema[query_id].dataType
-        cid_type = (
-            corpus.schema[corpus_id].dataType
-            if corpus is not None
-            else enc.schema["pqid"].dataType
-        )
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField(query_id, qid_type),
-                    StructField(corpus_id, cid_type),
-                    StructField("score" if rerank > k else "adc", DoubleType()),
-                    StructField("rank", IntegerType()),
-                ]
-            ),
-        )
-    qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-    Q = np.array([[np.float32(v) for v in r[1]] for r in qrows],
-                 dtype=np.float32)
-    CB = np.zeros((m, codes, sub), dtype=np.float32)
-    for r in cb.collect():
-        CB[r["s"], r["cid"]] = np.asarray(r["centroid"], dtype=np.float32)
+    qids, Q, empty = _adc_queries(
+        "pq_topk_lut", queries, corpus, enc, k, rerank, max_queries,
+        query_id, query_vec, corpus_id,
+    )
+    if empty is not None:
+        return empty
+    CB = _codebook_array(cb, m, codes, sub)
 
     nq = len(qids)
-    D = np.zeros((nq, m, codes), dtype=np.float64)
+    D = np.zeros((nq, 1, m, codes), dtype=np.float64)
     q9 = Decimal("1e-9")
     for s in range(m):
         qs = Q[:, s * sub : (s + 1) * sub]
@@ -782,62 +784,12 @@ def pq_topk_lut(
             acc = acc + sq[:, :, i]
         for qi in range(nq):
             for ci in range(codes):
-                D[qi, s, ci] = float(
+                D[qi, 0, s, ci] = float(
                     Decimal(repr(float(acc[qi, ci]))).quantize(q9, ROUND_HALF_UP)
                 )
-
-    R = max(k, rerank)
-    code_cols = [f"c{s}" for s in range(m)]
-    mm = m
-
-    def scan(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for b in batches:
-            ids = b["pqid"].to_numpy(dtype=_np.int64)
-            order = _np.argsort(ids, kind="stable")      # id-asc tie-break
-            ids = ids[order]
-            C = _np.stack(
-                [b[c].to_numpy(dtype=_np.int64)[order] for c in code_cols],
-                axis=1,
-            )
-            adc = _np.zeros((nq, len(ids)), dtype=_np.float64)
-            for s in range(mm):
-                adc += D[:, s, C[:, s]]
-            adc = _np.floor(adc * 1e6 + 0.5) / 1e6       # HALF_UP to 6
-            r = min(R, len(ids))
-            out_q, out_id, out_d = [], [], []
-            for qi in range(nq):
-                top = _np.argsort(adc[qi], kind="stable")[:r]
-                out_q.append(_np.full(r, qids[qi]))
-                out_id.append(ids[top])
-                out_d.append(adc[qi][top])
-            yield _pd.DataFrame(
-                {
-                    "qid_": _np.concatenate(out_q),
-                    "pqid": _np.concatenate(out_id),
-                    "adc": _np.concatenate(out_d),
-                }
-            )
-
-    cand = enc.select("pqid", *code_cols).mapInPandas(
-        scan, "qid_ long, pqid long, adc double"
-    ).withColumnRenamed("qid_", query_id)
-    w = Window.partitionBy(query_id).orderBy(F.asc("adc"), F.asc("pqid"))
-    ranked = cand.withColumn("rn", F.row_number().over(w))
-    if rerank <= k:
-        return ranked.filter(F.col("rn") <= k).select(
-            query_id, F.col("pqid").alias(corpus_id), "adc",
-            F.col("rn").alias("rank")
-        )
-    cands = ranked.filter(F.col("rn") <= rerank).select(
-        query_id, F.col("pqid").alias(corpus_id)
-    )
-    if corpus is None:
-        raise ValueError("rerank needs the corpus vectors")
-    return _exact_rerank(queries, corpus, cands, k, query_id, query_vec,
-                         corpus_id, corpus_vec)
+    slot = np.zeros((nq, 1), dtype=np.int64)
+    return _adc_scan(queries, corpus, enc, qids, D, slot, None, k, rerank,
+                     query_id, query_vec, corpus_id, corpus_vec)
 
 
 _NS_STEPS = 50  # σ/‖M‖_F ≳ 1e-8 reaches 1; σ/‖M‖_F ≲ 1e-15 stays < 1e-6
@@ -1169,28 +1121,28 @@ def ivfpq_topk(
 ) -> DataFrame:
     """Composed IVF×PQ search — the production 10^12-vector serving shape
     (VERDICT r5 item 3): coarse-quantizer PRUNE (only the nprobe nearest
-    lists per query are scanned), per-list residual-PQ LUT ADC scan
-    (packed codes never unpack; per-(query,list) distance tables ship in
-    the mapInPandas closure), then exact cosine re-rank of the candidate
-    pool on the original vectors.
+    lists per query are scanned; nprobe ≥ n_lists probes every list, as
+    ivf_topk and ivf_topk_kmeans do), per-list residual-PQ ADC over the
+    packed codes with one distance table per (query, probed list), then
+    exact cosine re-rank of the candidate pool on the original vectors.
 
     vs `pq_topk_lut`: that path scans the WHOLE code stream per query;
-    here each query touches ~nprobe/n_lists of it, and because the probed
-    lists reach the scan as a pushed `cid IN (...)` filter, a code stream
-    persisted partitioned-by-cid prunes unscanned partitions entirely.
+    here each query touches ~nprobe/n_lists of it. Both run `_adc_scan`,
+    which pushes the probed lists ahead of the scan as a `cid IN (...)`
+    filter, so a code stream persisted partitioned-by-cid prunes unscanned
+    partitions entirely.
 
     Determinism: coarse probe ranks on squared L2 rounded half-up to 9
-    (binary, as `_np_nearest`) with ties to the lowest cid; ADC sums round
-    half-up to 6 with ties to the lowest pqid; the per-batch top-R cut
-    keeps every global top-R row regardless of Arrow batch boundaries, so
-    output is partitioning-invariant. There is no relational twin (the
-    composition is pinned-oracle territory like pq_topk/opq_topk); the
-    ADC→exact agreement contract is pinned by tests instead.
+    (binary, as `_np_nearest`) with ties to the lowest cid; residual
+    tables round the same way; ADC sums, ties and the per-batch cut are
+    `_adc_scan`'s. The composition is pinned-oracle territory like
+    pq_topk_lut/opq_topk; the ADC→exact agreement contract is pinned by
+    tests.
 
     index: pass `ivfpq_fit(...)`'s (coarse_centroids, codebooks, encoded)
     to skip the fit — train once, serve every query batch. rerank > k
     requires `corpus` for the exact stage. queries are the bounded side
-    (max_queries guard, as pq_topk_lut)."""
+    (`_adc_queries`, as pq_topk_lut)."""
     import numpy as np
 
     if index is None:
@@ -1203,48 +1155,20 @@ def ivfpq_topk(
         )
     coarse, cb, enc_listed = index
     n_lists = len(coarse)
+    nprobe = min(nprobe, n_lists)
     sub = dim // m
 
-    qrows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivfpq_topk queries side exceeds max_queries={max_queries}; "
-            "batch the query side or raise max_queries explicitly"
-        )
-    if not qrows:
-        from pyspark.sql.types import (
-            DoubleType, IntegerType, StructField, StructType,
-        )
-
-        spark = (corpus if corpus is not None else enc_listed).sparkSession
-        qid_type = queries.schema[query_id].dataType
-        cid_type = (
-            corpus.schema[corpus_id].dataType
-            if corpus is not None
-            else enc_listed.schema["pqid"].dataType
-        )
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField(query_id, qid_type),
-                    StructField(corpus_id, cid_type),
-                    StructField("score" if rerank > k else "adc", DoubleType()),
-                    StructField("rank", IntegerType()),
-                ]
-            ),
-        )
-
-    qids = np.array([int(r[0]) for r in qrows], dtype=np.int64)
-    Q = np.array([[np.float32(v) for v in r[1]] for r in qrows],
-                 dtype=np.float32)
+    qids, Q, empty = _adc_queries(
+        "ivfpq_topk", queries, corpus, enc_listed, k, rerank, max_queries,
+        query_id, query_vec, corpus_id,
+    )
+    if empty is not None:
+        return empty
+    CB = _codebook_array(cb, m, codes, sub)
     nq = len(qids)
     Cc = np.zeros((n_lists, dim), dtype=np.float32)
     for cid, vec in coarse:
         Cc[cid] = np.asarray(vec, dtype=np.float32)
-    CB = np.zeros((m, codes, sub), dtype=np.float32)
-    for r in cb.collect():
-        CB[r["s"], r["cid"]] = np.asarray(r["centroid"], dtype=np.float32)
 
     # coarse probe: rounded squared L2 (the _np_nearest discipline), stable
     # argsort => ties to the lowest cid
@@ -1266,78 +1190,9 @@ def ivfpq_topk(
 
     # slot lookup: for each query, list id -> probe slot (or -1 = unprobed)
     slot = np.full((nq, n_lists), -1, dtype=np.int64)
-    for qi in range(nq):
-        slot[qi, probes[qi]] = np.arange(nprobe)
-
-    probed_union = sorted({int(c) for row in probes for c in row})
-    R = max(k, rerank)
-    code_cols = [f"c{s}" for s in range(m)]
-    mm = m
-
-    def scan(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for b in batches:
-            if not len(b):
-                continue
-            ids = b["pqid"].to_numpy(dtype=_np.int64)
-            order = _np.argsort(ids, kind="stable")       # id-asc tie-break
-            ids = ids[order]
-            lists = b["cid"].to_numpy(dtype=_np.int64)[order]
-            C = _np.stack(
-                [b[c].to_numpy(dtype=_np.int64)[order] for c in code_cols],
-                axis=1,
-            )
-            out_q, out_id, out_d = [], [], []
-            for qi in range(nq):
-                sel = slot[qi][lists]                     # (n,) probe slot
-                mask = sel >= 0
-                if not mask.any():
-                    continue
-                sl = sel[mask]
-                Cm = C[mask]
-                adc = _np.zeros(len(sl), dtype=_np.float64)
-                for s in range(mm):
-                    adc += D[qi, sl, s, Cm[:, s]]
-                adc = _np.floor(adc * 1e6 + 0.5) / 1e6    # HALF_UP to 6
-                r = min(R, len(adc))
-                top = _np.argsort(adc, kind="stable")[:r]
-                out_q.append(_np.full(r, qids[qi]))
-                out_id.append(ids[mask][top])
-                out_d.append(adc[top])
-            if not out_q:
-                continue
-            yield _pd.DataFrame(
-                {
-                    "qid_": _np.concatenate(out_q),
-                    "pqid": _np.concatenate(out_id),
-                    "adc": _np.concatenate(out_d),
-                }
-            )
-
-    # the probed-lists filter is a pushable predicate: a code stream stored
-    # partitioned by cid skips unprobed partitions before the scan runs
-    cand = (
-        enc_listed.select("pqid", "cid", *code_cols)
-        .filter(F.col("cid").isin(probed_union))
-        .mapInPandas(scan, "qid_ long, pqid long, adc double")
-        .withColumnRenamed("qid_", query_id)
-    )
-    w = Window.partitionBy(query_id).orderBy(F.asc("adc"), F.asc("pqid"))
-    ranked = cand.withColumn("rn", F.row_number().over(w))
-    if rerank <= k:
-        return ranked.filter(F.col("rn") <= k).select(
-            query_id, F.col("pqid").alias(corpus_id), "adc",
-            F.col("rn").alias("rank")
-        )
-    if corpus is None:
-        raise ValueError("rerank needs the corpus vectors")
-    cands = ranked.filter(F.col("rn") <= rerank).select(
-        query_id, F.col("pqid").alias(corpus_id)
-    )
-    return _exact_rerank(queries, corpus, cands, k, query_id, query_vec,
-                         corpus_id, corpus_vec)
+    slot[np.arange(nq)[:, None], probes] = np.arange(nprobe)
+    return _adc_scan(queries, corpus, enc_listed, qids, D, slot, "cid", k,
+                     rerank, query_id, query_vec, corpus_id, corpus_vec)
 
 
 def ivf_topk(

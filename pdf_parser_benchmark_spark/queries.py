@@ -915,30 +915,28 @@ def q_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Product-quantization ADC top-k (Jégou et al. 2011): corpus encoded
     as m=4 byte codes (16× compression of the 64-dim float32 vectors);
     query ranks by summed subspace-distance table lookups — the corpus side
-    ships only (id, code) pairs. Quality contract (cluster precision 1.0 on
-    clustered data; PQ ties within clusters by construction) is pinned in
-    test_operators_spark."""
-    from .operators.knn import pq_topk
+    ships only its codes. Raw ADC ranks, no re-rank; quality contract
+    (cluster precision 1.0 on clustered data; PQ ties within clusters by
+    construction) is pinned in test_operators_spark."""
+    from .operators.knn import pq_topk_lut
 
     emb = _t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     corpus = emb.filter(F.col("vec_id") >= 3)
-    return pq_topk(queries, corpus, k=3, iterations=2).select(
+    return pq_topk_lut(queries, corpus, k=3, iterations=2).select(
         "qid", "vec_id", "rank"
     )
 
 
 @query("pq_topk_lut")  # iterative fit — pinned oracle (tools/gen_pinned.py)
 def q_pq_topk_lut(spark: SparkSession, sf: str) -> DataFrame:
-    """The production PQ search shape (VERDICT r4 item 3): same fitted
-    index as q:pq_topk, but ADC scoring runs as a broadcast-LUT numpy
-    gather inside mapInPandas with per-batch partial top-R — zero joins on
-    the code stream; only the tiny candidate stream (batches·Q·R rows) is
-    shuffled — followed by the exact cosine re-rank of the top-10
-    candidates. test_operators_spark pins this path row-identical to the
-    relational ADC twin on a shared fit."""
+    """The two-stage PQ search: the same fitted index and ADC scan as
+    q:pq_topk (broadcast distance tables, numpy gather inside mapInPandas
+    with a per-batch top-R cut, so only the small candidate stream
+    shuffles), followed by the exact cosine re-rank of the top-10
+    candidates."""
     from .operators.knn import pq_topk_lut
 
     emb = _t(spark, sf, "embeddings")
@@ -1530,29 +1528,19 @@ def q_strip_dup_paragraphs(spark: SparkSession, sf: str) -> DataFrame:
     return out.withColumn("n_dropped", F.col("n_dropped").cast("bigint"))
 
 
+# decorators apply bottom-up, so the registry keeps dedup_clusters first
+@query("dedup_clusters_2p", _DEDUP_CLUSTERS_ORACLE)
 @query("dedup_clusters", _DEDUP_CLUSTERS_ORACLE)
 def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """Near-duplicate CLUSTERS: connected components over the blocked
     Jaccard pair graph (τ=0.1), labels = min reachable id. The step after
     pair generation in every real dedup pipeline — pairs alone can't tell
-    you which docs to keep when dups chain (a~b, b~c). Iterative hash-min
-    label propagation on Spark; the oracle is a recursive-CTE transitive
-    closure, so the fixpoint itself is value-verified."""
-    docs = _t(spark, sf, "documents")
-    nodes = docs.select(F.col("doc_id").alias("id"))
-    edges = DD.jaccard_neardup_pairs(
-        docs, "doc_id", "text", "source", threshold=0.1
-    ).select("id_a", "id_b")
-    return DD.connected_components(nodes, edges)
-
-
-@query("dedup_clusters_2p", _DEDUP_CLUSTERS_ORACLE)
-def q_dedup_clusters_2p(spark: SparkSession, sf: str) -> DataFrame:
-    """Same cluster labels through the alternating small-star/large-star
-    algorithm (Kiveris et al., SoCC'14) — the O(log² n)-round variant that
-    survives duplicate chains whose diameter defeats hash-min propagation
-    (VERDICT r3 item 6). Value-verified against the same recursive-CTE
-    transitive-closure oracle as dedup_clusters."""
+    you which docs to keep when dups chain (a~b, b~c). Alternating
+    large-star/small-star rounds (Kiveris et al., SoCC'14), O(log² n)
+    rounds on any graph, so a long duplicate chain still converges. The
+    oracle is a recursive-CTE transitive closure, so the fixpoint itself
+    is value-verified. Registered under both names the query contract
+    has; one algorithm serves both."""
     docs = _t(spark, sf, "documents")
     nodes = docs.select(F.col("doc_id").alias("id"))
     edges = DD.jaccard_neardup_pairs(

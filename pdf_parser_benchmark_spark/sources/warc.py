@@ -26,20 +26,32 @@ from pyspark.sql import DataFrame, SparkSession
 from ..synth.pages import PAGES_SCHEMA
 
 _GZIP_MAGIC = b"\x1f\x8b"
+_WINDOW = 64 * 1024  # compressed bytes fed to zlib per decompress call
+
+
+def _gzip_members(data: bytes) -> Iterator[tuple[int, int, bytes]]:
+    """(offset, length, plain bytes) per gzip member, in one linear pass:
+    each member's decompressor is fed fixed-size memoryview windows until
+    its eof, then the position steps back by len(unused_data), so no call
+    copies the rest of the file. A truncated last member yields its partial
+    output and runs to the end of the data; a non-gzip tail ends the loop;
+    zlib errors propagate."""
+    view, pos, n = memoryview(data), 0, len(data)
+    while pos < n and data[pos : pos + 2] == _GZIP_MAGIC:
+        d = zlib.decompressobj(wbits=47)
+        out, end = [], pos
+        while not d.eof and end < n:
+            out.append(d.decompress(view[end : end + _WINDOW]))
+            end = min(end + _WINDOW, n)
+        end -= len(d.unused_data)
+        yield pos, end - pos, b"".join(out)
+        pos = end
 
 
 def split_gzip_members(data: bytes) -> Iterator[bytes]:
     """Decompress a stream of concatenated gzip members one member at a
     time (the CC per-record framing)."""
-    pos = 0
-    while pos < len(data) and data[pos : pos + 2] == _GZIP_MAGIC:
-        d = zlib.decompressobj(wbits=47)
-        out = d.decompress(data[pos:])
-        yield out
-        consumed = len(data) - pos - len(d.unused_data)
-        if consumed <= 0:
-            break
-        pos += consumed
+    return (plain for _, _, plain in _gzip_members(data))
 
 
 def iter_warc_records(data: bytes) -> Iterator[tuple[dict, bytes]]:
@@ -120,20 +132,9 @@ def parse_warc_file(data: bytes) -> list[dict]:
 def build_member_index(data: bytes) -> list[tuple[int, int]]:
     """cdx-style member index for a per-record-gzip WARC: (offset, length)
     per gzip member. Common Crawl publishes exactly this in its cdx/cluster
-    indexes; building it needs one sequential pass (decompression discarded,
-    only boundaries kept) — at scale you read the published index instead."""
-    index: list[tuple[int, int]] = []
-    pos = 0
-    n = len(data)
-    while pos < n and data[pos : pos + 2] == _GZIP_MAGIC:
-        d = zlib.decompressobj(wbits=47)
-        d.decompress(data[pos:])
-        consumed = n - pos - len(d.unused_data)
-        if consumed <= 0:
-            break
-        index.append((pos, consumed))
-        pos += consumed
-    return index
+    indexes; building it needs one sequential pass (the plain bytes are
+    discarded, only boundaries kept) — at scale you read the published index instead."""
+    return [(off, ln) for off, ln, _ in _gzip_members(data)]
 
 
 def read_warc_pages_split(

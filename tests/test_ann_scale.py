@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pdf_parser_benchmark_spark.operators.knn import (
     brute_force_topk,
     ivf_topk_kmeans,
-    pq_topk,
+    pq_topk_lut,
 )
 from pdf_parser_benchmark_spark.synth.vectors import (
     ensure_vector_corpus,
@@ -70,7 +70,7 @@ def test_pq_adc_reranked_recall_at_100k(corpus, queries, exact_top10):
     recall@10 ≥ 0.9 over 100k vectors. Without the re-rank stage ADC alone
     cannot rank within a cluster — that gap is the point of the two-stage
     search, not a bug."""
-    approx = pq_topk(
+    approx = pq_topk_lut(
         queries, corpus, k=K, m=8, dim=DIM, codes=16, rerank=50
     ).select("qid", "vec_id")
     assert _recall(exact_top10, approx) >= 0.9

@@ -89,7 +89,7 @@ def test_pq_pretrained_index_matches_inline_fit(spark):
     the fit-inside-the-call path, including through the re-rank stage."""
     from pyspark.sql import functions as F
 
-    from pdf_parser_benchmark_spark.operators.knn import pq_fit, pq_topk
+    from pdf_parser_benchmark_spark.operators.knn import pq_fit, pq_topk_lut
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 3).select(
@@ -100,16 +100,16 @@ def test_pq_pretrained_index_matches_inline_fit(spark):
     cb, enc = pq_fit(corpus, m=4, dim=64, k=16)
     cb, enc = cb.persist(), enc.persist()
     for rerank in (0, 20):
-        inline = pq_topk(queries, corpus, k=5, m=4, dim=64, rerank=rerank)
-        stored = pq_topk(queries, corpus, k=5, m=4, dim=64, rerank=rerank,
-                         codebooks=cb, encoded=enc)
+        inline = pq_topk_lut(queries, corpus, k=5, m=4, dim=64, rerank=rerank)
+        stored = pq_topk_lut(queries, corpus, k=5, m=4, dim=64, rerank=rerank,
+                             codebooks=cb, encoded=enc)
         assert sorted(map(tuple, inline.collect())) == sorted(
             map(tuple, stored.collect())
         )
     import pytest
 
     with pytest.raises(ValueError, match="together"):
-        pq_topk(queries, corpus, codebooks=cb)
+        pq_topk_lut(queries, corpus, codebooks=cb)
 
 
 def test_kmeans_preserves_non_numeric_id_type(spark):
