@@ -27,11 +27,9 @@ def _scored_topk(
     scored: DataFrame, k: int, query_id: str, corpus_id: str
 ) -> DataFrame:
     """Exact top-k per query over a scored pair stream: one window ranked
-    by (score desc, corpus_id asc). A salted two-level variant (per-slice
-    top-k, then global) was measured in r7 and came out no faster even at
-    100k corpus rows per query — the single sort over narrow
-    (qid, id, score) rows is not the bottleneck — so the simpler plan
-    (one exchange fewer) stays."""
+    by (score desc, corpus_id asc). A salted two-level variant (per-slice,
+    then global top-k) was no faster at 100k corpus rows per query, so the
+    plan with one exchange fewer stays."""
     w = Window.partitionBy(query_id).orderBy(F.desc("score"), F.asc(corpus_id))
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -192,9 +190,8 @@ def brute_force_topk(
     """Exact k-NN: the query vectors (a bounded driver collect that stops
     at `max_queries` + 1 rows, like ivfpq's query side) ship in the task
     closure and `_cosine_topk` scores every (query, corpus row) pair in
-    one numpy pass, then keeps the exact top k. No pair join: the former
-    broadcast nested-loop join copied two full vectors per pair only to
-    fold a dot product — ~1 GB of array copying for 20×100k pairs."""
+    one numpy pass, then keeps the exact top k. No pair join, which would
+    copy two full vectors per pair only to fold a dot product."""
     qrows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
     if len(qrows) > max_queries:
         raise ValueError(
@@ -285,8 +282,7 @@ def _np_nearest(vecs32, cents32):
 def _round6_f32(mean_vec) -> list[float]:
     """F.round(x, 6) then cast to array<float>, replicated: HALF_UP on the
     shortest-decimal repr (BigDecimal.valueOf semantics), then a float32
-    narrowing — the exact value chain the former relational centroid
-    recompute produced."""
+    narrowing."""
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
@@ -305,17 +301,12 @@ def kmeans_fit(
     k: int = 4,
     iterations: int = 4,
 ) -> DataFrame:
-    """Deterministic Lloyd's k-means, fully vectorized (r5): each iteration
-    is ONE numpy mapInPandas pass over the corpus — per Arrow batch the
+    """Deterministic Lloyd's k-means, fully vectorized: each iteration is
+    ONE numpy mapInPandas pass over the corpus — per Arrow batch the
     centroids (shipped in the closure: k·dim floats) are assigned with
     `_np_nearest` and the per-cluster partial sums are accumulated with
     np.add.at, so only k bounded rows reach the driver, which combines and
-    rounds the means HALF_UP to 6 decimals + float32 (`_round6_f32` — the
-    identical value chain the relational recompute produced, so centroids
-    and every pinned oracle downstream are unchanged). Zero shuffle, zero
-    per-row Python, no posexplode row blowup, and — the r5 finding — no
-    O(k·dim) driver-side Column-literal construction, which at k=16·dim=64
-    cost seconds of py4j round-trips per iteration before any execution.
+    rounds the means HALF_UP to 6 decimals + float32 (`_round6_f32`).
 
     Init = the k lowest-id vectors rounded to 6; fixed iteration count, no
     data-dependent stopping — reruns and different partitionings produce
@@ -333,9 +324,7 @@ def kmeans_fit(
         )
     ]
     centroids = init
-    # carry the id column through UNTOUCHED (ADVICE r5: the former
-    # cast("long") silently nulled non-numeric ids; the pandas pass never
-    # computes on the id, so any type passes through byte-identical)
+    # the pandas pass never computes on the id: any id type passes through
     id_type = corpus.schema[id_col].dataType.simpleString()
     vecs_df = corpus.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
@@ -441,6 +430,18 @@ def ivf_topk_kmeans(
                         corpus_vec, list_of)
 
 
+def _integral_ids(who: str, *frames: tuple[DataFrame | None, str]) -> None:
+    """ADC ranks int64 ids (the code stream's pqid): a query or corpus id
+    column of another type raises here, before the fit or any job."""
+    from pyspark.sql.types import IntegralType
+
+    for df, col in frames:
+        t = df.schema[col].dataType if df is not None else None
+        if t is not None and not isinstance(t, IntegralType):
+            raise ValueError(f"{who}: id column {col!r} is {t.simpleString()}, "
+                             "not an integral type")
+
+
 def pq_fit(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -458,19 +459,15 @@ def pq_fit(
 
     → (codebooks (s, cid, centroid array<float>), encoded (pqid, c0..c{m-1})).
 
-    Training is JOINT across subspaces and fully vectorized (r5): each
-    Lloyd iteration is ONE numpy mapInPandas pass over the raw corpus —
-    per Arrow batch, vectors are sliced into their m subvectors, assigned
-    with `_np_nearest` against the closure-shipped codebooks, and reduced
-    to (s, cid) partial sums; only m·k bounded rows reach the driver.
-    The encode step is a second numpy scan emitting (pqid, c0..c{m-1})
-    directly. Zero shuffle, zero explode, and none of the O(m·k·sub)
-    driver-side Column-literal construction that made the previous shapes
-    seconds-per-iteration before any execution. Per-subspace semantics are
-    unchanged (init = the k lowest-id vectors' slices rounded to 6,
-    squared-L2 rounded to 9 with ties to lowest cid, means rounded to
-    6 + float32 via `_round6_f32`); empty clusters keep their previous
-    centroid — pinned oracles downstream hold."""
+    Training is joint across subspaces: each Lloyd iteration is ONE numpy
+    mapInPandas pass — per Arrow batch, vectors are sliced into their m
+    subvectors, assigned with `_np_nearest` against the closure-shipped
+    codebooks and reduced to (s, cid) partial sums, so only m·k rows reach
+    the driver; a second numpy scan emits the codes. Per subspace: init =
+    the k lowest-id vectors' slices rounded to 6, squared L2 rounded to 9
+    with ties to the lowest cid, means via `_round6_f32`; empty clusters
+    keep their previous centroid. The id must be integral (`pqid`)."""
+    _integral_ids("pq_fit", (corpus, id_col))
     spark = corpus.sparkSession
     sub = dim // m
 
@@ -754,6 +751,7 @@ def pq_topk_lut(
     import numpy as np
 
     sub = dim // m
+    _integral_ids("pq_topk_lut", (queries, query_id), (corpus, corpus_id))
     if (codebooks is None) != (encoded is None):
         raise ValueError("pass codebooks and encoded together")
     if codebooks is None:
@@ -977,6 +975,7 @@ def opq_topk(
             "a prebuilt (codebooks, encoded) index requires the rotation it "
             "was encoded under — pass rotation= from the same opq fit"
         )
+    _integral_ids("opq_topk", (queries, query_id), (corpus, corpus_id))
     if rotation is None:
         rotation = opq_rotation(
             corpus, corpus_id, corpus_vec, m=m, dim=dim, codes=codes,
@@ -993,21 +992,17 @@ def opq_topk(
     rot_queries = rotate_vectors(
         queries.select(query_id, query_vec), rotation, query_vec
     )
-    if rerank <= k:
-        # no exact stage requested: ADC ranking is the result (adc scores
-        # are in rotated space, which preserves L2 — keep the schema)
-        return pq_topk_lut(
-            rot_queries, None, k=k, m=m, dim=dim, codes=codes,
-            query_id=query_id, query_vec=query_vec, corpus_id=corpus_id,
-            codebooks=cb, encoded=enc,
-        )
     cands = pq_topk_lut(
         rot_queries, None, k=max(k, rerank), m=m, dim=dim, codes=codes,
         query_id=query_id, query_vec=query_vec, corpus_id=corpus_id,
         codebooks=cb, encoded=enc,
-    ).select(query_id, corpus_id)
-    return _exact_rerank(queries, corpus, cands, k, query_id, query_vec,
-                         corpus_id, corpus_vec)
+    )
+    if rerank <= k:
+        # no exact stage requested: ADC ranking is the result (adc scores
+        # are in rotated space, which preserves L2 — keep the schema)
+        return cands
+    return _exact_rerank(queries, corpus, cands.select(query_id, corpus_id),
+                         k, query_id, query_vec, corpus_id, corpus_vec)
 
 
 def ivfpq_fit(
@@ -1030,12 +1025,10 @@ def ivfpq_fit(
     residuals concentrate near 0 across all lists, so one shared codebook
     quantizes them far better than it quantizes raw positions.
 
-    All distributed pieces reuse the existing machinery: `kmeans_fit`
-    (vectorized Lloyd's, k bounded driver rows per iteration) for the
-    coarse step, one zero-shuffle mapInPandas pass to form residuals
-    (centroids ship in the closure — n_lists·dim floats), `pq_fit`
-    (joint-subspace vectorized Lloyd's) over the residuals, then one
-    broadcast-hash join to attach the list id to the packed codes.
+    Steps: `kmeans_fit` for the coarse quantizer, one zero-shuffle
+    mapInPandas pass to form residuals (the centroids ship in the
+    closure), `pq_fit` over the residuals, then one broadcast-hash join to
+    attach the list id to the packed codes.
 
     Returns (coarse_centroids, codebooks, encoded):
       coarse_centroids — list[(cid, [float])] (driver-side, n_lists rows);
@@ -1048,12 +1041,10 @@ def ivfpq_fit(
 
     from .dedup import _scoped_persist
 
+    _integral_ids("ivfpq_fit", (corpus, id_col))
     vecs = corpus.select(id_col, vec_col)
-    # run the coarse Lloyd iterations; the returned lazy assignment frame
-    # is deliberately unused — the fused pass below recomputes the final
-    # assignment (same _np_nearest on the same centroids, deterministic)
-    # together with the residuals in ONE corpus pass, replacing the former
-    # assign pass + corpus⋈assignment join + residual pass (r7).
+    # the coarse Lloyd iterations; their lazy assignment frame is unused:
+    # the pass below recomputes the same assignment with the residuals
     kmeans_fit(vecs, id_col, vec_col, k=n_lists, iterations=coarse_iterations)
     coarse = kmeans_fit.last_centroids
     Cc = np.asarray([v for _, v in coarse], dtype=np.float32)
@@ -1075,11 +1066,8 @@ def ivfpq_fit(
             })
 
     id_type = corpus.schema[id_col].dataType.simpleString()
-    # persisted: pq_fit makes ~pq_iterations+2 passes over `residuals`,
-    # and without materialization EVERY pass would re-execute the fused
-    # assignment+residual pass (measured: ivfpq_train ≈ 4-5× pq_train for
-    # the same iteration count before r7). Registered with
-    # release_intermediates() like every other multi-branch intermediate.
+    # persisted (and released with release_intermediates()): pq_fit makes
+    # ~pq_iterations+2 passes over `residuals`, each of which would redo it
     residuals = _scoped_persist(
         vecs.mapInPandas(
             assign_resid_gen, f"{id_col} {id_type}, cid int, __resid array<float>"
@@ -1119,8 +1107,8 @@ def ivfpq_topk(
     index=None,
     max_queries: int = 10_000,
 ) -> DataFrame:
-    """Composed IVF×PQ search — the production 10^12-vector serving shape
-    (VERDICT r5 item 3): coarse-quantizer PRUNE (only the nprobe nearest
+    """Composed IVF×PQ search — the production 10^12-vector serving shape:
+    coarse-quantizer PRUNE (only the nprobe nearest
     lists per query are scanned; nprobe ≥ n_lists probes every list, as
     ivf_topk and ivf_topk_kmeans do), per-list residual-PQ ADC over the
     packed codes with one distance table per (query, probed list), then
@@ -1145,6 +1133,7 @@ def ivfpq_topk(
     (`_adc_queries`, as pq_topk_lut)."""
     import numpy as np
 
+    _integral_ids("ivfpq_topk", (queries, query_id), (corpus, corpus_id))
     if index is None:
         if corpus is None:
             raise ValueError("pass corpus or a prebuilt index=ivfpq_fit(...)")

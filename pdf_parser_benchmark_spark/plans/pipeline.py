@@ -17,10 +17,9 @@ Scale design (north_rule):
   ``extract_splits`` its only call site — batch and resumable paths both
   go through it, so every path emits the same bytes. Per document it
   returns one representation, the canonical record of
-  ``extract_document_json`` (the golden files' function), and its scalars;
-  ``text``, ``spans``, ``chunk_count``, ``parser`` and ``source`` are one
-  ``from_json`` over ``canonical`` in the JVM, which Catalyst prunes to the
-  fields a reader uses;
+  ``extract_document_json`` (the golden files' function), and its
+  scalars: the columns the sink stores. Readers derive ``text``, ``spans``
+  and the meta columns in the JVM (``sources.sink.project_extracted``);
 - parallelism: zero-shuffle by default — task granularity comes from the
   input splits; ``n_tasks`` forces a repartition whose only key is
   ``xxhash64(url)``, uniform regardless of the zipf host distribution;
@@ -28,19 +27,9 @@ Scale design (north_rule):
   ``salted_host_key``, which split hot hosts across S buckets
   (``concat(host, pmod(xxhash64(url), S))``); AQE skew-join stays on;
 - the heavy stage is mapInPandas: the only shuffle after it is the
-  write's repartition by split;
-- one read of the input per job: ``run_pipeline`` lists the remaining
-  splits and then commits them in batches, and all of those jobs read one
-  cached copy of the split-tagged pages. The batch filter cannot be pushed
-  into the source instead, because ``split_id`` is a hash of the url the
-  source only knows after parsing (a WARC file holds urls of every split);
-- a commit batch runs only its extraction+write (under AQE, the shuffle
-  map stage and the write stage); no job follows it. The extracted rows
-  are never persisted or read twice: the split listing already counted
-  each split's rows (one output row per input row), and the driver writes
-  the batch's manifest rows from those counts without a job. The run
-  summary is observed on the batch writes, so no job follows the last
-  batch either: the output is never read back.
+  write's repartition by split, which moves the record and its scalars;
+- one read of the input per job, and no job after a commit batch's
+  extraction+write, the last batch's included (``run_pipeline``).
 """
 
 from __future__ import annotations
@@ -55,30 +44,8 @@ from ..extract.assemble import extract_document_json
 from ..sources import checkpoint as ckpt
 # perfbench's tracing hooks look up lineage_counters and read_extracted here
 from ..sources.lineage import SUMMARY_COUNTERS, lineage_counters, summary_metrics  # noqa: F401
+from ..sources.sink import EXTRACTED_SCHEMA, _KERNEL_SCHEMA, project_extracted  # noqa: F401
 from ..sources.sink import read_extracted, write_extracted  # noqa: F401
-
-_SPANS = (
-    "array<struct<start:int,end:int,kind:string,page:int,"
-    "chapter:string,section:string>>"
-)
-EXTRACTED_SCHEMA = (
-    f"url string, warc_ts timestamp, lang string, text string, spans {_SPANS}, "
-    "chunk_count int, parser string, source string, "
-    "canonical string, n_bytes_in bigint, error string, split_id int"
-)
-# what the kernel returns: the canonical record is the only content column
-_KERNEL_SCHEMA = (
-    "url string, warc_ts timestamp, lang string, canonical string, "
-    "n_bytes_in bigint, error string, split_id int"
-)
-# the fields of the canonical record (canonical.encode_doc) that become columns
-_DOC_SCHEMA = (
-    f"text string, spans {_SPANS}, "
-    "meta struct<chunk_count:int,parser:string,source:string>"
-)
-# Jackson's default cap on one JSON string is 20M chars: a longer text would
-# parse to null
-_DOC_OPTIONS = {"maxStringLen": str(2**31 - 1)}
 
 
 def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
@@ -149,29 +116,20 @@ def auto_salted_host_key(
 
 def extract_splits(df: DataFrame, n_tasks: int | None = None) -> DataFrame:
     """The one extraction call site: a frame that already carries
-    ``split_id`` → extracted rows (EXTRACTED_SCHEMA). With ``n_tasks`` the
-    rows are first repartitioned on ``xxhash64(url)``; otherwise the plan is
-    shuffle-free and task granularity comes from the input splits."""
+    ``split_id`` → the kernel's rows (``_KERNEL_SCHEMA``). With ``n_tasks``
+    the rows are first repartitioned on ``xxhash64(url)``; otherwise the
+    plan is shuffle-free and task granularity comes from the input splits."""
     if n_tasks is not None:
         df = df.repartition(n_tasks, F.xxhash64("url"))
-    # the other content columns are views of the record. The parse gets its
-    # own column so the plan holds one from_json (fields taken from it
-    # directly in one select would each parse the record again); Catalyst
-    # prunes it to the fields a reader uses, or drops it if it uses none.
-    doc = df.mapInPandas(_extract_batches, schema=_KERNEL_SCHEMA).select(
-        "*", F.from_json("canonical", _DOC_SCHEMA, _DOC_OPTIONS).alias("_doc")
-    )
-    return doc.select(
-        "url", "warc_ts", "lang", "_doc.text", "_doc.spans",
-        "_doc.meta.chunk_count", "_doc.meta.parser", "_doc.meta.source",
-        "canonical", "n_bytes_in", "error", "split_id",
-    )
+    return df.mapInPandas(_extract_batches, schema=_KERNEL_SCHEMA)
 
 
 def extract_pages(
     pages: DataFrame, n_splits: int = 64, n_tasks: int | None = None
 ) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → extracted DF (no I/O).
+    """pages(url, warc_ts, html, text, lang) → ``EXTRACTED_SCHEMA`` rows
+    (no I/O), as ``read_extracted`` returns them from ``run_pipeline``'s
+    output over the same pages.
 
     Extraction is embarrassingly parallel, so the DEFAULT (n_tasks=None) is
     zero-shuffle: task granularity comes from input splits
@@ -181,7 +139,8 @@ def extract_pages(
     ``xxhash64(url)`` first — needed when the source is a few huge
     unsplittable files.
     """
-    return extract_splits(ckpt.with_split_id(pages, n_splits), n_tasks)
+    df = ckpt.with_split_id(pages, n_splits)
+    return project_extracted(extract_splits(df, n_tasks))
 
 
 def run_pipeline(

@@ -155,12 +155,8 @@ def compact_manifest(spark: SparkSession, manifest_dir: str) -> int:
 
 # MANIFEST_SCHEMA as the Arrow schema of the driver-written files
 _MANIFEST_ARROW = pa.schema([
-    ("split_id", pa.int32()),
-    ("status", pa.string()),
-    ("rows_out", pa.int64()),
-    ("run_id", pa.string()),
-    ("n_splits", pa.int32()),
-    ("commit_seq", pa.int64()),
+    (name, {"INT": pa.int32(), "STRING": pa.string(), "BIGINT": pa.int64()}[t])
+    for name, t in (field.split() for field in MANIFEST_SCHEMA.split(", "))
 ])
 
 

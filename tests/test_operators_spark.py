@@ -884,6 +884,38 @@ def test_ivfpq_empty_queries_and_bounded_query_guard(spark, monkeypatch):
     assert collected == [11]
 
 
+def test_adc_string_ids_raise_before_any_job(spark):
+    """ADC ranks int64 ids: a string query or corpus id column raises a
+    ValueError naming the column and its type before the fit or any Spark
+    job, instead of int() failing on the driver or CAST_INVALID_INPUT
+    failing inside a job."""
+    from pdf_parser_benchmark_spark.operators.knn import (
+        ivfpq_topk,
+        opq_topk,
+        pq_topk_lut,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"))
+    corpus = emb.filter(F.col("vec_id") >= 3)
+    str_queries = queries.withColumn("qid", F.concat(F.lit("q"), "qid"))
+    str_corpus = corpus.withColumn("vec_id", F.concat(F.lit("d"), "vec_id"))
+    sc = spark.sparkContext
+    sc.setJobGroup("adc-string-ids", "adc-string-ids")
+    try:
+        for search in (pq_topk_lut, ivfpq_topk, opq_topk):
+            for q, c, col in ((str_queries, corpus, "qid"),
+                              (queries, str_corpus, "vec_id")):
+                with pytest.raises(ValueError,
+                                   match=f"{search.__name__}: id column '{col}' is string"):
+                    search(q, c, k=3, iterations=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("adc-string-ids") == []
+
+
 def test_rerank_blend_overrules_vector_proxy(spark):
     """The reranker's point (reference ACTION_ITEMS reranker): a candidate
     with slightly lower vector similarity but high joint text overlap must

@@ -546,7 +546,9 @@ def test_summary_observed_above_the_write_exchange(spark, pages, tmp_path):
     """In each commit batch's write plan the summary's CollectMetrics node
     sits above the repartition Exchange, in the write's result stage: a
     result task's metrics merge once per partition, a recomputed shuffle
-    map stage's would count its rows twice."""
+    map stage's would count its rows twice. The write job parses no text
+    or spans: it moves the record as stored, and the summary's parser
+    counts read a parse of canonical whose schema holds only ``meta``."""
     out = str(tmp_path / "out")
     run_pipeline(spark, pages, out, str(tmp_path / "mani"), n_splits=8, commit_batches=2)
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
@@ -558,6 +560,8 @@ def test_summary_observed_above_the_write_exchange(spark, pages, tmp_path):
             plans.append(plan)
     assert len(plans) == 2
     for plan in plans:
+        assert "from_json(StructField(meta," in plan
+        assert "StructField(text," not in plan and "StructField(spans," not in plan
         final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
         lines = final.splitlines()
         observe = [i for i, line in enumerate(lines) if "CollectMetrics" in line]
@@ -626,3 +630,67 @@ def test_text_longer_than_the_json_string_cap_is_derived(spark):
     (row,) = extract_pages(page, n_splits=1).select(
         F.length("text").alias("n"), "error").collect()
     assert row["error"] is None and row["n"] == n
+
+
+@pytest.fixture(scope="module")
+def stored(spark, poisoned, tmp_path_factory):
+    """A run_pipeline output directory over the poisoned pages."""
+    base = tmp_path_factory.mktemp("stored")
+    out = str(base / "out")
+    run_pipeline(spark, poisoned, out, str(base / "mani"), n_splits=8)
+    return out
+
+
+def _sorted_rows(df):
+    return sorted(df.collect(), key=lambda r: r["url"])
+
+
+def test_output_stores_only_the_kernel_columns(spark, stored):
+    """The table holds the kernel's seven columns: the record and its
+    scalars, no parsed copy of the record."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from pdf_parser_benchmark_spark.plans.pipeline import _KERNEL_SCHEMA
+
+    assert spark.read.parquet(stored).schema == StructType.fromDDL(_KERNEL_SCHEMA)
+    files = glob.glob(f"{stored}/split_id=*/part-*.parquet")
+    assert len(files) == 8
+    for f in files:  # split_id is the partition directory, not a file column
+        assert pq.read_schema(f).names == [
+            "url", "warc_ts", "lang", "canonical", "n_bytes_in", "error",
+        ]
+
+
+def test_read_extracted_equals_extract_pages(spark, poisoned, stored):
+    """Reading the stored record back derives exactly the rows extraction
+    returns, over all EXTRACTED_SCHEMA columns, the error row included."""
+    back = read_extracted(spark, stored)
+    assert back.schema == StructType.fromDDL(EXTRACTED_SCHEMA)
+    got = _sorted_rows(back)
+    assert len(got) == N_ROWS + 1
+    assert got == _sorted_rows(extract_pages(poisoned, n_splits=8))
+    (poison,) = [r for r in got if r["url"] == POISON_URL]
+    assert poison["error"] is not None
+
+
+@pytest.mark.parametrize("split", [0, 7])
+def test_read_extracted_reads_splits_stored_with_derived_columns(
+    spark, poisoned, stored, tmp_path, split
+):
+    """A split written in the earlier 12-column format (the derived columns
+    stored beside the record) reads the same next to splits that store the
+    kernel's columns only, whichever format the read infers its schema from."""
+    mixed = str(tmp_path / "mixed")
+    shutil.copytree(stored, mixed)
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    (
+        extract_pages(poisoned, n_splits=8)
+        .filter(F.col("split_id") == split)
+        .write.mode("overwrite").partitionBy("split_id").parquet(mixed)
+    )
+    assert set(DERIVED) <= set(spark.read.parquet(f"{mixed}/split_id={split}").columns)
+    back = read_extracted(spark, mixed)
+    assert back.schema == StructType.fromDDL(EXTRACTED_SCHEMA)
+    assert _sorted_rows(back) == _sorted_rows(read_extracted(spark, stored))
